@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev scratch A/B harness (r16): time declared keys under session-conf
-  * variants (e.g. AQE on/off) to attribute fixed overhead. Interleaved
-  * passes like graft.Profile. Not part of the driver contract.
+  * variants (e.g. AQE on/off) to attribute fixed overhead, in interleaved
+  * passes. Each run fully materializes the query into the `noop` sink, as
+  * JobTrace does. Not part of the driver contract.
   *
   * Usage: runMain graft.AbTest <sfDir> <confKey=val[,key=val...]|-> <key> [key...]
   *   ("-" = no conf override, i.e. a plain A/A control)
@@ -22,17 +23,18 @@ object AbTest {
       if (on) confs.foreach { case (k, v) => spark.conf.set(k, v) }
       else base.foreach { case (k, ov) => ov.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     val fns = keys.map(k => k -> SparkEntry.queries(k))
+    def run(f: (SparkSession, String) => DataFrame): Unit =
+      f(spark, sfDir).write.format("noop").mode("overwrite").save()
     // warm both variants
-    fns.foreach { case (_, f) => f(spark, sfDir).count() }
-    setAll(true); fns.foreach { case (_, f) => f(spark, sfDir).count() }; setAll(false)
+    fns.foreach { case (_, f) => run(f) }
+    setAll(true); fns.foreach { case (_, f) => run(f) }; setAll(false)
     val times = collection.mutable.Map[(String, String), Vector[Double]]().withDefaultValue(Vector())
     (1 to 3).foreach { _ =>
       for ((variant, on) <- Seq("base" -> false, "conf" -> true); (k, f) <- fns) {
         setAll(on)
         val t0 = System.nanoTime()
-        val n = f(spark, sfDir).count()
+        run(f)
         times((k, variant)) :+= (System.nanoTime() - t0) / 1e9
-        assert(n >= 0)
         setAll(false)
       }
     }

@@ -53,6 +53,14 @@ object Bench {
     * error. Everything after it would be a spurious failure. */
   private object ContextDead extends RuntimeException("SparkContext shut down")
 
+  /** Whether a run can be divided by the canary's quiet reference: only
+    * the run that reference was measured on — the sf0.1 tables (exact
+    * basename; r8 ADVICE: a substring match took sf0.125 too) at local[32].
+    * Any other core count reports its raw time as `value_normalized`.
+    */
+  private[graft] def normalizable(sfDir: String, cpus: String): Boolean =
+    new java.io.File(sfDir).getName == "sf0.1" && cpus == "32"
+
   def main(args: Array[String]): Unit = {
     val wallT0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - wallT0) / 1e9
@@ -130,7 +138,7 @@ object Bench {
       "agg_groupby_pricing", "join_multiway_star", "win_topk_per_group",
       "stream_session_5m", "sim_topk_cosine")
     val canaryQuietRef = 1.599 // sum of the five quiet-window medians above
-    val normalizable = new java.io.File(sfDir).getName == "sf0.1"
+    val canNormalize = normalizable(sfDir, cpus)
     // Per-key canary timings (r8 ADVICE): a canary that fails or goes
     // missing must be VISIBLE (null in the JSON) and must disable
     // normalization — the old flatMap(...).sum silently dropped it and
@@ -158,13 +166,13 @@ object Bench {
       def canaryOk: Boolean = (canaryStart.values ++ canaryEnd.values).forall(_.isDefined)
       def canaryStartSum: Double = canaryStart.values.flatten.sum
       def canaryEndSum: Double = canaryEnd.values.flatten.sum
-      // normalization is only meaningful against the sf0.1 quiet reference
-      // (exact basename match — r8 ADVICE: substring matched sf0.125 etc.)
-      // and only when every canary key succeeded at both ends. Mid-run
+      // normalization is only meaningful against the sf0.1 / 32-cpu quiet
+      // reference (see [[normalizable]]) and only when every canary key
+      // succeeded at both ends. Mid-run
       // (before the end canary exists) a PROVISIONAL start-only factor keeps
       // partial records normalizable; the final record always uses both.
       def driftFactor: Option[Double] =
-        if (!normalizable) None
+        if (!canNormalize) None
         else if (canaryOk) Some(((canaryStartSum + canaryEndSum) / 2) / canaryQuietRef)
         else if (canaryStart.values.forall(_.isDefined) && sweepsDone < 3)
           Some(canaryStartSum / canaryQuietRef)

@@ -313,15 +313,7 @@ object CrossCheck {
     val sfDir = args(0)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
     // per-check nonempty-input probe (r14 ADVICE): the graph checks run on
     // the co-purchase edge stream, the semantic family on embeddings — a
     // vacuous both-empty agreement must be vouched for by ITS OWN input,

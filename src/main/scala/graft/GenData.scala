@@ -230,15 +230,9 @@ object GenData {
     val outDir = args(0)
     val sf = args(1).toDouble // e.g. 1.0 → 10× the bench scale
     val srcDims = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    // writer-only runtime conf: events.ts is written as TIMESTAMP(MICROS)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     def emit(name: String, df: DataFrame): Unit = {
       writeTable(outDir, name, df)
       println(s"[gen] $name done")

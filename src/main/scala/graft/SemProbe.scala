@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev instrument (not part of the driver contract): decompose the
@@ -12,15 +11,7 @@ import org.apache.spark.sql.functions._
 object SemProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val n = e.count()

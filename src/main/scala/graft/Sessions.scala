@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One session builder for every driver-facing main (Bench, Verify,
-  * PlanDump) — r15 ADVICE: PlanDump had drifted its own inline copy of the
-  * config, and a drifted dev session dumps plans that are unrepresentative
-  * of the sessions the driver actually measures. The config lives here once:
+/** The one session builder: every main (Bench, Verify, GenData and the dev
+  * tools PlanDump, JobTrace, AbTest, SemProbe, CrossCheck) and the test
+  * suites' TestSession get their session here, and CatalogSpec fails on any
+  * other `SparkSession.builder` call. Inline copies of the config had
+  * drifted (other core counts, no codegen cache, no nanosAsLong), and a
+  * drifted dev session times and dumps plans that are unrepresentative of
+  * the sessions the driver actually measures. The config lives here once:
   *
   *  - `spark.sql.shuffle.partitions` = cpus, not the 200 default — a
   *    local[N] box has N cores; 200 partitions is pure task-scheduling

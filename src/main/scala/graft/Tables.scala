@@ -53,17 +53,33 @@ object Tables {
     * bench rows and plan-invariant specs at dev scales must not move when
     * a scale path is added). Goes through the same Hadoop FS abstraction
     * as the reads, so it answers for any supported filesystem, not just
-    * local disk.
+    * local disk. A missing table reads as 0 bytes.
     */
-  /** Byte-gated task floor for compute-dense map work over a byte-tiny
-    * scan (r17 — the generic form of Vectors.spreadSmallScan /
-    * Text.spreadDocs; guide §2.5's "bytes are the wrong work proxy" case):
-    * when the table is smaller than parallelism × the 4 MB open-cost split
-    * floor, the scan yields fewer splits than cores and every downstream
-    * map stage (crypto hashes, regex, per-row kernels) serializes onto
-    * them. An explicit hash repartition to defaultParallelism
-    * (REPARTITION_BY_NUM — exempt from AQE byte-coalescing) spreads the
-    * work; above the gate the plan is byte-identical.
+  def inputBytes(s: SparkSession, dir: String, name: String): Long = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+  }
+
+  /** The task-floor gate, the one place its rule lives:
+    * true when `table` is smaller than defaultParallelism × the 4 MB
+    * open-cost split floor, i.e. when its scan yields fewer splits than
+    * cores. Below it a byte-tiny but compute-dense input (per-row crypto
+    * hashes, regex, shingle hashing, 64-d dot products, iterative graph
+    * rounds) would run its map stages on one or two tasks while the other
+    * cores idle — guide §2.5's "bytes are the wrong work proxy" case — so
+    * callers add an explicit spread, broadcast hint or co-partitioning.
+    * At cluster scale the input outgrows the gate and those plans are
+    * byte-identical to the ungated ones: no extra exchange on a scan that
+    * already has thousands of splits.
+    */
+  def belowTaskFloor(s: SparkSession, dir: String, table: String): Boolean =
+    inputBytes(s, dir, table) < s.sparkContext.defaultParallelism.toLong * 4L * 1024 * 1024
+
+  /** Below the [[belowTaskFloor]] gate, hash-repartition `df` on `keys` to
+    * defaultParallelism (REPARTITION_BY_NUM: exempt from AQE's byte
+    * coalescing and kept by every narrow op downstream, so the work
+    * spreads across the machine); above it, return `df` itself.
     */
   def spreadSmallScan(
       s: SparkSession,
@@ -71,17 +87,9 @@ object Tables {
       table: String,
       df: DataFrame,
       keys: org.apache.spark.sql.Column*,
-  ): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
-    if (inputBytes(s, dir, table) < p.toLong * 4L * 1024 * 1024) df.repartition(p, keys: _*)
+  ): DataFrame =
+    if (belowTaskFloor(s, dir, table)) df.repartition(s.sparkContext.defaultParallelism, keys: _*)
     else df
-  }
-
-  def inputBytes(s: SparkSession, dir: String, name: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
-  }
 
   /** `events.ts` has shipped in two encodings across driver testdata
     * generations: Parquet INT64 TIMESTAMP(NANOS) (rounds 1-5; Spark's

@@ -58,9 +58,9 @@ object Analytics {
 
   private def aggHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     // task-floor spread (r17): 4 md5 buckets per token occurrence off a
-    // one-split scan ran 0.84 s CPU in ONE task — see Text.spreadDocs
-    val toks = Text
-      .spreadDocs(s, dir, Tables.documents(s, dir))
+    // one-split scan ran 0.84 s CPU in ONE task
+    val toks = Tables
+      .spreadSmallScan(s, dir, "documents", Tables.documents(s, dir), col("doc_id"))
       .select(explode(split(Text.normText(col("text")), " ")).as("term"))
     // sketch: 4 counters per token occurrence, collapsed map-side to 2,048 rows
     val sketch = toks
@@ -951,8 +951,8 @@ object Analytics {
     */
   private def textBigramSurprisal(s: SparkSession, dir: String): DataFrame = {
     // task-floor spread (r17): the normText+bigram explode passes ran
-    // single-task off the one-split scan — see Text.spreadDocs
-    val docs = Text.spreadDocs(s, dir, Tables.documents(s, dir))
+    // single-task off the one-split scan
+    val docs = Tables.spreadSmallScan(s, dir, "documents", Tables.documents(s, dir), col("doc_id"))
     val bgRows = docs
       .select(col("doc_id"), split(Text.normText(col("text")), " ").as("w"))
       .select(col("doc_id"), explode(Text.bigrams(col("w"))).as("bg"))
@@ -1311,9 +1311,8 @@ object Analytics {
     * groupBys; the percentile scan is |score grid|-bounded).
     */
   private def filterSurprisalBand(s: SparkSession, dir: String): DataFrame = {
-    // task-floor spread (r17): see Text.spreadDocs
-    val toks = Text
-      .spreadDocs(s, dir, Tables.documents(s, dir))
+    val toks = Tables
+      .spreadSmallScan(s, dir, "documents", Tables.documents(s, dir), col("doc_id"))
       .select(col("doc_id"), explode(split(Text.normText(col("text")), " ")).as("term"))
     val freq = toks.groupBy("term").agg(nrows.as("c"))
     val total = freq.agg(sum("c").as("t"))

@@ -73,10 +73,10 @@ object Curation {
     //    InferFiltersFromGenerate would clone the (non-codegen) 5-gram HOF
     //    into inferred `size(gs) > 0 / isnotnull(gs)` scan filters and the
     //    interpreted transform would run 3x per row.
-    val base = Text
+    val base = Tables
       // task-floor spread (r17): the interpreted grams5 HOF projection ran
-      // single-task off the one-split scan — see Text.spreadDocs
-      .spreadDocs(s, dir, Tables.documents(s, dir))
+      // single-task off the one-split scan
+      .spreadSmallScan(s, dir, "documents", Tables.documents(s, dir), col("doc_id"))
       .select(col("doc_id"), Pipeline.hashBucket.as("bucket"), nw.as("w"))
       .select(
         col("doc_id"),

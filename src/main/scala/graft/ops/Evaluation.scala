@@ -303,8 +303,8 @@ object Evaluation {
       .select(col("probe_id"), col("cand_id"))
       .withColumn("hit", lit(1L))
     // task-floor spread (r17): the truth pass's |probes|·n dots are
-    // compute-dense map work off a one-split scan — see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(s, dir, Tables.embeddings(s, dir), col("vec_id"))
+    // compute-dense map work off a one-split scan
+    val e = Tables.spreadSmallScan(s, dir, "embeddings", Tables.embeddings(s, dir), col("vec_id"))
     val probes = e.filter(col("vec_id") < 100).select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
     val corpus = e.select(col("vec_id").as("cand_id"), col("embedding").as("cvec"))
     val w = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("cand_id"))
@@ -377,8 +377,7 @@ object Evaluation {
   private def simAnnIvfRecallCurve(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val cent = IvfAnn.gridCentroids(s, dir)
-    // task-floor spread (r17): see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(s, dir, Tables.embeddings(s, dir), col("vec_id"))
+    val e = Tables.spreadSmallScan(s, dir, "embeddings", Tables.embeddings(s, dir), col("vec_id"))
     val lists = IvfAnn.gridAssign(e, cent).select(col("vec_id").as("cand_id"), col("cid"))
     // shared routing (r13 ADVICE): the SAME implementation the declared
     // fused/probe keys run, rank kept — the curve cannot drift from the
@@ -490,7 +489,7 @@ object Evaluation {
     graft.functions.GraftFunctions.register(s)
     // task-floor spread (r17): the 4-prefix dot pass is compute-dense map
     // work off a one-split scan (measured 2.0 s CPU in ONE task at sf0.1)
-    val e = Vectors.spreadSmallScan(s, dir, Tables.embeddings(s, dir), col("vec_id"))
+    val e = Tables.spreadSmallScan(s, dir, "embeddings", Tables.embeddings(s, dir), col("vec_id"))
     val probes = e
       .filter(col("vec_id") < 100)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))

@@ -34,38 +34,6 @@ object Graph {
     */
   private val SuppOffset = 1000000000000L
 
-  /** Byte-gated per-round co-partition count for the iterative graph keys
-    * (r17): below the gate (lineitem smaller than parallelism × the 4 MB
-    * open-cost floor — the task-floor regime where stage count, not
-    * shuffle bytes, is the cost), the per-round frames are explicitly
-    * hash-partitioned on their join/aggregate keys at defaultParallelism
-    * so consecutive rounds co-partition and each round runs ONE exchange
-    * instead of three (join + aggregate + argmax each planned their own
-    * ENSURE_REQUIREMENTS exchange, and AQE byte-coalescing broke the
-    * co-partitioning between rounds). Above the gate: None — the explicit
-    * repartition would defeat map-side partial aggregation on the round
-    * exchange (guide §2.3), which at real scale is worth more than the
-    * stage it saves, so big inputs keep the planner's shape.
-    */
-  private[ops] def roundCoPartitions(
-      s: SparkSession,
-      dir: String,
-  ): Option[Int] = {
-    val p = s.sparkContext.defaultParallelism
-    if (graft.Tables.inputBytes(s, dir, "lineitem") < p.toLong * 4L * 1024 * 1024) Some(p)
-    else None
-  }
-
-  /** Apply the [[roundCoPartitions]] gate: hash-partition `df` on `keys`
-    * at the gated count, or leave it to the planner above the gate.
-    */
-  private[ops] def coPart(
-      n: Option[Int],
-      df: DataFrame,
-      keys: org.apache.spark.sql.Column*,
-  ): DataFrame =
-    n.map(p => df.repartition(p, keys: _*)).getOrElse(df)
-
   /** Cross-engine determinism: ranks live on an exact integer PICORANK grid
     * (1 pico = 1e-12 of total mass; initial mass = 1e12). The entire
     * iteration is integer arithmetic — contributions are `rank div deg`,
@@ -104,7 +72,7 @@ object Graph {
     // |E| edge side each round (the reused edge exchange is NOT re-read,
     // but its 1.17 M rows were re-SORTED per round). |ranks| = |V| rows,
     // bounded by the gated input bytes; above the gate the hint is off.
-    val bcRanks = roundCoPartitions(s, dir).isDefined
+    val bcRanks = Tables.belowTaskFloor(s, dir, "lineitem")
     for (_ <- 1 to 3) {
       val rk = ranks.select(col("node").as("src"), col("pico"))
       val contrib = edges
@@ -373,8 +341,8 @@ object Graph {
     // blocks are read by every round instead. NOT pre-partitioned: a
     // localCheckpoint's Scan ExistingRDD reports no partitioning under AQE
     // (measured r17 — consumers re-exchange regardless), so only LIVE
-    // exchanges can co-partition; the per-round coPart below is one.
-    val cp = roundCoPartitions(s, dir)
+    // exchanges can co-partition; the per-round repartition below is one.
+    val below = Tables.belowTaskFloor(s, dir, "lineitem")
     val edges = e0
       .select(col("c").as("src"), col("sp").as("dst"))
       .unionByName(e0.select(col("sp").as("src"), col("c").as("dst")))
@@ -407,13 +375,10 @@ object Graph {
       // safe below the gate, where |V| is bounded by the gated input
       // bytes; above the gate the planner's SMJ is the right call.
       val lblIn = labels.select(col("node").as("dst"), col("lbl"))
-      labels = coPart(
-        cp,
-        edges
-          .join(cp.map(_ => broadcast(lblIn)).getOrElse(lblIn), "dst")
-          .select(col("src"), col("lbl")),
-        col("src"),
-      )
+      val votes = edges
+        .join(if (below) broadcast(lblIn) else lblIn, "dst")
+        .select(col("src"), col("lbl"))
+      labels = (if (below) votes.repartition(s.sparkContext.defaultParallelism, col("src")) else votes)
         .groupBy(col("src").as("node"), col("lbl"))
         .agg(nrows.as("c"))
         .groupBy("node")

@@ -435,9 +435,9 @@ object IvfAnn {
     // task-floor spread (r17): grid6 fans each vector into 64 dim rows and
     // every Lloyd step pushes them through a ×K join + two aggregates whose
     // PARTIAL (map-side) halves run on the scan's split count — one split at
-    // dev scale ⇒ single-task training. See Vectors.spreadSmallScan.
-    val e = Vectors.spreadSmallScan(
-      s, dir, graft.Tables.embeddings(s, dir), col("vec_id"))
+    // dev scale ⇒ single-task training.
+    val e = graft.Tables.spreadSmallScan(
+      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
     val g = grid6(e)
     val seedW = Window.orderBy("vec_id") // bounded: runs on the k-row limit frame
     val seedIds = e
@@ -494,9 +494,9 @@ object IvfAnn {
   private def gridProbeStage(s: SparkSession, dir: String, cent: DataFrame): DataFrame = {
     GraftFunctions.register(s)
     // task-floor spread (r17): the inverted-list assignment and the exact
-    // re-rank dots are compute-dense map work — see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(
-      s, dir, graft.Tables.embeddings(s, dir), col("vec_id"))
+    // re-rank dots are compute-dense map work
+    val e = graft.Tables.spreadSmallScan(
+      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
     val lists = gridAssign(e, cent).select(col("vec_id").as("cand_id"), col("cid"))
     val routes = gridRoutes(e, cent, GridNprobe).select("probe_id", "cid")
     val pv = e.filter(col("vec_id") < 100).select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
@@ -539,9 +539,8 @@ object IvfAnn {
     */
   private def simAnnIvfBuild(s: SparkSession, dir: String): DataFrame = {
     val cent = gridCentroids(s, dir)
-    // task-floor spread (r17): see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(
-      s, dir, graft.Tables.embeddings(s, dir), col("vec_id"))
+    val e = graft.Tables.spreadSmallScan(
+      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
     val ln = gridAssign(e, cent).groupBy("cid").agg(count(lit(1)).as("list_n"))
     cent
       .join(ln, Seq("cid"), "left")
@@ -573,9 +572,8 @@ object IvfAnn {
     */
   private def corpusClusterMix(s: SparkSession, dir: String): DataFrame = {
     val cent = gridCentroids(s, dir)
-    // task-floor spread (r17): see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(
-      s, dir, graft.Tables.embeddings(s, dir), col("vec_id"))
+    val e = graft.Tables.spreadSmallScan(
+      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
     val dd = gridAssign(e, cent)
       .join(
         graft.Tables.documents(s, dir).select(col("doc_id").as("vec_id"), col("lang")),
@@ -622,9 +620,8 @@ object IvfAnn {
     */
   private def embedClusterDrift(s: SparkSession, dir: String): DataFrame = {
     val cent = gridCentroids(s, dir)
-    // task-floor spread (r17): see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(
-      s, dir, graft.Tables.embeddings(s, dir), col("vec_id"))
+    val e = graft.Tables.spreadSmallScan(
+      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
     val lists = gridAssign(e, cent)
     val mx = e.agg(max("vec_id").as("mxid"))
     val c = lists

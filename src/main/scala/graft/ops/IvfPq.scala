@@ -68,9 +68,10 @@ object IvfPq {
       cent: DataFrame,
   ): (DataFrame, DataFrame, DataFrame) = {
     // task-floor spread (r17): the residual grid + encode passes are
-    // compute-dense map work off a one-split scan — see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(
-      s, dir, Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), col("vec_id"))
+    // compute-dense map work off a one-split scan
+    val e = Tables.spreadSmallScan(
+      s, dir, "embeddings",
+      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), col("vec_id"))
     val g = IvfAnn.grid6(e)
     val lists = IvfAnn.gridAssign(e, cent)
     val res = g
@@ -128,9 +129,9 @@ object IvfPq {
       codes: DataFrame,
   ): DataFrame = {
     GraftFunctions.register(s)
-    // task-floor spread (r17): see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(
-      s, dir, Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), col("vec_id"))
+    val e = Tables.spreadSmallScan(
+      s, dir, "embeddings",
+      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), col("vec_id"))
     val g = IvfAnn.grid6(e)
     // probe routing: top-NProbe cells by exact grid distance (ties → lower
     // cid) — the shared kernel-form router (r17, one stage instead of two;

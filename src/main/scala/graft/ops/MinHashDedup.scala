@@ -158,8 +158,11 @@ object MinHashDedup {
   private def dedupMinhashLsh(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     // task-floor spread (r17): the signature + verify-shingle map passes
     // parallelize, and the repartition exchange is the materialization
-    // point AQE reuses between them — see Text.spreadDocs
-    nearDupPairs(Text.spreadDocs(s, dir, graft.Tables.documents(s, dir))).orderBy("id_a", "id_b")
+    // point AQE reuses between them (measured at sf0.1: the two passes ran
+    // 1.06 + 0.63 s, each in 1 task)
+    nearDupPairs(
+      graft.Tables.spreadSmallScan(s, dir, "documents", graft.Tables.documents(s, dir), col("doc_id"))
+    ).orderBy("id_a", "id_b")
 
   /** Connected components over the near-dup pair graph: every doc labeled
     * with the smallest doc_id reachable through near-dup edges — the dup
@@ -298,8 +301,8 @@ object MinHashDedup {
   }
 
   private def dedupClusters(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    // task-floor spread (r17): see Text.spreadDocs
-    val docs = Text.spreadDocs(s, dir, graft.Tables.documents(s, dir))
+    val docs = graft.Tables.spreadSmallScan(
+      s, dir, "documents", graft.Tables.documents(s, dir), col("doc_id"))
     clusters(docs, nearDupPairs(docs)).orderBy("doc_id")
   }
 
@@ -349,8 +352,8 @@ object MinHashDedup {
     * never corpus-sized), and the aggregate rides the same partitioning.
     */
   private def dedupKeepBest(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    // task-floor spread (r17): see Text.spreadDocs
-    val docs = Text.spreadDocs(s, dir, graft.Tables.documents(s, dir))
+    val docs = graft.Tables.spreadSmallScan(
+      s, dir, "documents", graft.Tables.documents(s, dir), col("doc_id"))
     val lab = clusters(docs, nearDupPairs(docs))
     val q = docs.select(col("doc_id"), TextQuality.qualityCol.as("quality"))
     val w = org.apache.spark.sql.expressions.Window
@@ -407,9 +410,9 @@ object MinHashDedup {
     */
   private def dedupIncrementalMinhash(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     // task-floor spread (r17) BEFORE the seen/batch split so both shards'
-    // signature passes parallelize — see Text.spreadDocs
-    val docs = Text
-      .spreadDocs(s, dir, graft.Tables.documents(s, dir))
+    // signature passes parallelize
+    val docs = graft.Tables
+      .spreadSmallScan(s, dir, "documents", graft.Tables.documents(s, dir), col("doc_id"))
       .select(col("doc_id"), col("text"))
     val seen = docs.filter(col("doc_id") < 250)
     val batch = docs

@@ -523,9 +523,8 @@ object Mixes {
     * no single-task window at any n).
     */
   private def sampleImportanceDsir(s: SparkSession, dir: String): DataFrame = {
-    // task-floor spread (r17): see Text.spreadDocs
-    val toks = Text
-      .spreadDocs(s, dir, Tables.documents(s, dir))
+    val toks = Tables
+      .spreadSmallScan(s, dir, "documents", Tables.documents(s, dir), col("doc_id"))
       .select(col("doc_id"), col("lang"), explode(split(Text.normText(col("text")), " ")).as("w"))
       .filter(length(col("w")) >= 1)
     val cc = toks.groupBy("w").agg(nrows.as("cc"))

@@ -83,8 +83,7 @@ object Resampling {
     // parity isn't required.
     val rows = Tables
       // task-floor spread (r17): the per-row md5 + 50-replicate fan-out ran
-      // 0.5 s CPU in ONE task off the one-split scan — see
-      // Tables.spreadSmallScan
+      // 0.5 s CPU in ONE task off the one-split scan
       .spreadSmallScan(
         s, dir, "orders",
         Tables.orders(s, dir).select(col("o_orderkey"), col("o_totalprice")),

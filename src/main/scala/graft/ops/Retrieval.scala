@@ -235,8 +235,8 @@ object Retrieval {
   private def retrievalMmr(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     // task-floor spread (r17): the pool-scoring pass's |probes|·n dots are
-    // compute-dense map work off a one-split scan — see Vectors.spreadSmallScan
-    val e = Vectors.spreadSmallScan(s, dir, Tables.embeddings(s, dir), col("vec_id"))
+    // compute-dense map work off a one-split scan
+    val e = Tables.spreadSmallScan(s, dir, "embeddings", Tables.embeddings(s, dir), col("vec_id"))
     val probes = e.filter(col("vec_id") < 100).select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
     val corpus = e.select(col("vec_id").as("cand_id"), col("embedding").as("cvec"))
     def sim6(a: Column, b: Column): Column =

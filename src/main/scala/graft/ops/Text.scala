@@ -27,36 +27,6 @@ object Text {
     */
   def normText(c: Column): Column = lower(trim(regexp_replace(c, "\\s+", " ")))
 
-  /** Byte-gated task floor for COMPUTE-DENSE document plans (r17 — the
-    * documents-side twin of Vectors.spreadSmallScan, guide §2.5's "bytes
-    * are the wrong work proxy" case): the documents table is byte-tiny
-    * relative to its per-row arithmetic — normalization regex + shingle
-    * zip_with + per-shingle xxhash64 — so the scan splitter hands the whole
-    * corpus to ONE split and every downstream map stage runs single-task
-    * (measured at sf0.1: dedup_near_jaccard's shingle stage = 1.6 s CPU in
-    * 1 task while 31 cores idled; dedup_minhash_lsh's two signature/shingle
-    * passes = 1.06 + 0.63 s, each 1 task). An explicit hash repartition on
-    * doc_id to defaultParallelism (REPARTITION_BY_NUM — exempt from AQE
-    * byte-coalescing) spreads the text work across the machine, and its
-    * exchange doubles as the materialization point AQE stage reuse dedups
-    * when the same doc frame feeds two map-side passes (signatures +
-    * verify shingles). Fires only when the scan would otherwise have fewer
-    * splits than cores (table bytes < parallelism × the 4 MB open-cost
-    * split floor); at cluster scale the gate is off and the plan is
-    * byte-identical — no extra exchange on a corpus that already has
-    * thousands of splits.
-    */
-  private[graft] def spreadDocs(
-      s: SparkSession,
-      dir: String,
-      df: DataFrame,
-  ): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
-    if (graft.Tables.inputBytes(s, dir, "documents") < p.toLong * 4L * 1024 * 1024)
-      df.repartition(p, col("doc_id"))
-    else df
-  }
-
   private def words(c: Column): Column = split(c, " ")
 
   /** Word bigrams without a generator UDF: zip the word array against itself
@@ -259,8 +229,10 @@ object Text {
     * (deterministic); round(4) declared.
     */
   private def dedupNearJaccard(s: SparkSession, dir: String): DataFrame = {
-    // task-floor spread (r17): the shingle map work parallelizes; see spreadDocs
-    val docs = spreadDocs(s, dir, Tables.documents(s, dir))
+    // task-floor spread (r17): the shingle map work parallelizes (measured
+    // at sf0.1: the shingle stage ran 1.6 s CPU in 1 task while 31 cores
+    // idled)
+    val docs = Tables.spreadSmallScan(s, dir, "documents", Tables.documents(s, dir), col("doc_id"))
     // Doc-grain arrays keep BOTH the per-doc distinct and the sizes entirely
     // map-side: explode(array_distinct(..)) needs no global distinct()
     // exchange (uniqueness within a doc is the only uniqueness the pair
@@ -326,9 +298,10 @@ object Text {
     // while 30 cores idled. Spreading the bare (doc_id, text) scan first
     // means ONE scan feeds one exchange whose blocks both union branches
     // read (AQE exchange reuse), and the excerpt regex runs at full
-    // parallelism. Above the gate spreadDocs is identity, so the cluster
+    // parallelism. Above the gate the spread is identity, so the cluster
     // plan keeps the planner's shape unchanged.
-    val base = spreadDocs(s, dir, Tables.documents(s, dir).select(col("doc_id"), col("text")))
+    val base = Tables.spreadSmallScan(
+      s, dir, "documents", Tables.documents(s, dir).select(col("doc_id"), col("text")), col("doc_id"))
     val excerpts = base
       .filter(col("doc_id") % 20 === 0)
       .select(col("doc_id"), words(normText(col("text"))).as("w"))
@@ -516,8 +489,8 @@ object Text {
     * exchange at any scale. Novelty is a round(4) ratio of exact ints.
     */
   private def textNovelty(s: SparkSession, dir: String): DataFrame = {
-    // task-floor spread (r17): see spreadDocs
-    val arr = shingleHashArrays(spreadDocs(s, dir, Tables.documents(s, dir)))
+    val arr = shingleHashArrays(
+      Tables.spreadSmallScan(s, dir, "documents", Tables.documents(s, dir), col("doc_id")))
     val sh = arr.select(
       col("doc_id"),
       size(col("shs")).cast("long").as("n_sh"),
@@ -578,8 +551,7 @@ object Text {
   private val SpanDfCap = 65536L
 
   private def dedupSubstringSpans(s: SparkSession, dir: String): DataFrame = {
-    // task-floor spread (r17): see spreadDocs
-    val wins = spreadDocs(s, dir, Tables.documents(s, dir))
+    val wins = Tables.spreadSmallScan(s, dir, "documents", Tables.documents(s, dir), col("doc_id"))
       .select(col("doc_id"), words(normText(col("text"))).as("w"))
       .filter(size(col("w")) >= SpanK)
       .select(

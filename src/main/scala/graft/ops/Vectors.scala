@@ -41,46 +41,6 @@ object Vectors {
     */
   def nativeDot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** The byte gate for the compute-dense embedding trades below, shared
-    * between [[spreadSmallScan]] and the broadcast side of the same trade: a
-    * byte-gated broadcast() hint on the build side of a compute-dense join
-    * keeps ENSURE_REQUIREMENTS exchanges out of the INITIAL plan entirely —
-    * measured on mine_hard_negatives, AQE's own SMJ→BHJ conversion leaves
-    * the probe side's exchange behind as a `local` AQEShuffleRead and then
-    * byte-coalesces it to ONE partition, clamping the pair-dot stage to one
-    * task no matter how the upstream was partitioned.
-    */
-  private[graft] def denseEmbGate(s: SparkSession, dir: String): Boolean = {
-    val p = s.sparkContext.defaultParallelism
-    graft.Tables.inputBytes(s, dir, "embeddings") < p.toLong * 4L * 1024 * 1024
-  }
-
-  /** Byte-gated task floor for COMPUTE-DENSE embedding plans (r16, guide
-    * §2.5's "bytes are the wrong work proxy" case): the embeddings table is
-    * byte-tiny relative to its arithmetic — every downstream pair join costs
-    * ~64 FMAs per candidate row — so both the scan splitter (one ≥4 MB-floor
-    * split for the whole file) and AQE's byte-targeted partition coalescing
-    * funnel the dot-product work into 1-3 tasks (measured: the
-    * mine_hard_negatives pair stage ran 1.7 s CPU in ONE task at sf0.1 while
-    * 31 cores idled). An explicit hash repartition to defaultParallelism is
-    * exempt from AQE coalescing (REPARTITION_BY_NUM) and survives every
-    * narrow op downstream, so the dots spread across the machine.
-    *
-    * Gated on the table's on-disk bytes: the repartition fires only when the
-    * scan would otherwise produce fewer splits than cores
-    * (bytes < parallelism × the 4 MB open-cost split floor). At cluster
-    * scale the input outgrows the gate and the plan is byte-identical to
-    * the ungated one — no extra exchange on a 100 TB scan that already has
-    * thousands of splits.
-    */
-  private[graft] def spreadSmallScan(
-      s: SparkSession,
-      dir: String,
-      df: DataFrame,
-      keys: Column*,
-  ): DataFrame =
-    if (denseEmbGate(s, dir)) df.repartition(s.sparkContext.defaultParallelism, keys: _*) else df
-
   /** For the 100 probe vectors (vec_id < 100): top-10 nearest corpus
     * neighbors by cosine (self excluded), rank on (rounded sim desc, cand_id).
     */
@@ -197,8 +157,8 @@ object Vectors {
   private[ops] def knnClassifyQuery(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     // task-floor spread (r17): the |probes|·n vote-scoring dots are
-    // compute-dense map work off a one-split scan — see spreadSmallScan
-    val e = spreadSmallScan(s, dir, Tables.embeddings(s, dir), col("vec_id"))
+    // compute-dense map work off a one-split scan
+    val e = Tables.spreadSmallScan(s, dir, "embeddings", Tables.embeddings(s, dir), col("vec_id"))
     val probes = e
       .filter(col("vec_id") < 100)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"), col("label").as("true_label"))
@@ -304,9 +264,11 @@ object Vectors {
     // task-floor spread (r16): hash(vec_id) partitioning survives the
     // routing window, the member join, and the self-join's AQE local
     // shuffle reads, so the pair-dot stage runs machine-wide instead of in
-    // the scan's single split (see spreadSmallScan)
-    val e = spreadSmallScan(
-      s, dir, Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), col("vec_id"))
+    // the scan's single split (measured at sf0.1: 1.7 s CPU in ONE task
+    // while 31 cores idled)
+    val e = Tables.spreadSmallScan(
+      s, dir, "embeddings",
+      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), col("vec_id"))
     // shares the session-cached corpus centroids with the semantic-dedup
     // family (r13 — IvfAnn.gridCellsOf scaladoc): same target, same corpus
     val cells = IvfAnn.gridCellsOf(e, probes = 2, cacheKey = Some("emb:" + dir))
@@ -326,12 +288,12 @@ object Vectors {
     // below the gate: hint the neg side broadcast so the INITIAL plan is a
     // BHJ and the anchor side keeps its 32-way partitioning end to end (an
     // AQE-converted BHJ leaves the probe's SMJ exchange behind and
-    // byte-coalesces it to one task — see denseEmbGate). Above the gate the
+    // byte-coalesces it to one task, measured here). Above the gate the
     // member frame grows with n and the strategy stays AQE's size-based
     // call, exactly as before.
     val negSide = em.select(col("cid"), col("vec_id").as("neg_id"), col("embedding").as("nv"))
     em.select(col("cid"), col("vec_id").as("anchor_id"), col("embedding").as("av"))
-      .join(if (denseEmbGate(s, dir)) broadcast(negSide) else negSide, "cid")
+      .join(if (Tables.belowTaskFloor(s, dir, "embeddings")) broadcast(negSide) else negSide, "cid")
       .filter(col("anchor_id") =!= col("neg_id"))
       .withColumn("sim", round(nativeDot(col("av"), col("nv")), 4))
       .filter(col("sim") >= HnBandLo && col("sim") < HnBandHi)

@@ -29,7 +29,7 @@ class CatalogSpec extends SparkSpec {
     * a forked runner with a nested working directory must still lint
     * instead of failing with a bare file-not-found).
     */
-  private def repoFile(name: String): String = {
+  private def repoPath(name: String): java.nio.file.Path = {
     val root = Iterator
       .iterate(java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath)(p =>
         Option(p.getParent).getOrElse(p))
@@ -37,10 +37,26 @@ class CatalogSpec extends SparkSpec {
       .find(p => java.nio.file.Files.exists(p.resolve(name)))
     assert(root.isDefined,
       s"$name not found from ${sys.props("user.dir")} upward — run tests from within the repo")
-    new String(
-      java.nio.file.Files.readAllBytes(root.get.resolve(name)),
-      java.nio.charset.StandardCharsets.UTF_8,
-    )
+    root.get.resolve(name)
+  }
+
+  private def repoFile(name: String): String =
+    new String(java.nio.file.Files.readAllBytes(repoPath(name)), java.nio.charset.StandardCharsets.UTF_8)
+
+  test("one session builder: no session is built outside Sessions.scala") {
+    // every main and TestSession must go through Sessions.build; inline
+    // copies of the session config drifted (core count, codegen cache,
+    // nanosAsLong) each time one was written
+    import scala.jdk.CollectionConverters._
+    val builderCall = """SparkSession\s*\.\s*[Bb]uilder""".r
+    val offenders = Seq("src/main", "src/test").flatMap { d =>
+      val files = java.nio.file.Files.walk(repoPath(d))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filterNot(_.getFileName.toString == "Sessions.scala").filter { f =>
+      builderCall.findFirstIn(java.nio.file.Files.readString(f)).isDefined
+    }
+    assert(offenders.isEmpty, s"session built outside Sessions.build in: ${offenders.mkString(", ")}")
   }
 
   test("SURVEY §2 lists every declared key (doc-drift lint)") {

@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one session — Test/fork). */
+/** Shared local session for all suites (one JVM, one session — Test/fork),
+  * built by the same [[Sessions.build]] the driver mains use, at a fixed
+  * local[4] so suite results do not depend on the host's core count.
+  */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.build("4")
   val sfDir = "/root/testdata/sf0.001"
 }
 
