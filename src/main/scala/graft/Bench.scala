@@ -87,23 +87,6 @@ object Bench {
         s"local[$cpus]; do not compare with official local[32] rows.")
     }
     val spark = Sessions.build(cpus)
-    // Shuffle-write bytes per query (measured on the FIRST timed sweep —
-    // byte counts, unlike times, are pass-invariant, and sweep 1 is the one
-    // sweep a degraded run is guaranteed to finish): the judge-facing scale
-    // signal. A query whose time looks fine at sf0.1 but whose shuffle grows
-    // super-linearly is the one that dies at 100 TB.
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleAcc.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    // listener delivery is async: poll until the counter stabilizes
-    def settle(): Long = {
-      var prev = -1L; var i = 0
-      while (shuffleAcc.get != prev && i < 25) { prev = shuffleAcc.get; Thread.sleep(20); i += 1 }
-      shuffleAcc.get
-    }
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
@@ -361,11 +344,15 @@ object Bench {
                 a.sheds += s"sweep$p:halted mid-sweep at $k"
                 halted = true
               } else {
-                if (p == 1) { settle(); shuffleAcc.set(0) }
-                timeOnce(SparkEntry.queries(k)) match {
+                // Shuffle-write bytes, kept from sweep 1 (bytes barely move
+                // between passes; a degraded run always finishes sweep 1): the
+                // scale signal. A query whose time looks fine at sf0.1 but
+                // whose shuffle grows super-linearly dies at 100 TB.
+                val (time, m) = QueryMetrics.measure(spark)(timeOnce(SparkEntry.queries(k)))
+                time match {
                   case Some(t) =>
                     a.samples(k) = a.samples(k) :+ t
-                    if (p == 1) a.bytesOf(k) = settle()
+                    if (p == 1) a.bytesOf(k) = m.shuffleWriteBytes
                   case None => a.errors += k
                 }
               }

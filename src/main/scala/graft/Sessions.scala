@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder: every main (Bench, Verify, GenData and the dev
-  * tools PlanDump, JobTrace, AbTest, SemProbe, CrossCheck) and the test
-  * suites' TestSession get their session here, and CatalogSpec fails on any
-  * other `SparkSession.builder` call. Inline copies of the config had
+  * tools PlanDump, Probe, SemProbe, CrossCheck) and the test suites'
+  * TestSession get their session here, and CatalogSpec fails on any other
+  * `SparkSession.builder` call. Inline copies of the config had
   * drifted (other core counts, no codegen cache, no nanosAsLong), and a
   * drifted dev session times and dumps plans that are unrepresentative of
   * the sessions the driver actually measures. The config lives here once:

@@ -59,49 +59,6 @@ object GraftFunctions {
           children.lift(1).map(_.eval().asInstanceOf[Number].intValue()).getOrElse(128),
         ),
     ),
-    // Spark's OWN runtime-filter expressions, which the optimizer injects
-    // but the public registry doesn't expose: surfacing them lets plans
-    // build explicit semi-join bloom prunes (Text.pairableShinglesBloom)
-    // with the exact sketch the engine trusts for its runtime filters —
-    // no custom bloom implementation to get wrong.
-    (
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg",
-      ),
-      // 1-3 args like the engine's own injection sites: (child),
-      // (child, estimatedItems), (child, estimatedItems, numBits) —
-      // explicit arity dispatch so a wrong call count is an analysis
-      // error, not an IndexOutOfBoundsException from the builder
-      (children: Seq[Expression]) =>
-        children match {
-          case Seq(c) =>
-            new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
-          case Seq(c, n) =>
-            new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
-          case Seq(c, n, b) =>
-            new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n, b)
-          case _ =>
-            throw new IllegalArgumentException(
-              s"graft_bloom_agg expects 1 to 3 arguments, got ${children.length}")
-        },
-    ),
-    (
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain",
-      ),
-      (children: Seq[Expression]) =>
-        children match {
-          case Seq(bf, v) =>
-            org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bf, v)
-          case _ =>
-            throw new IllegalArgumentException(
-              s"graft_might_contain expects 2 arguments, got ${children.length}")
-        },
-    ),
   )
 
   def register(spark: SparkSession): Unit =

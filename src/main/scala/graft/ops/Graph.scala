@@ -145,8 +145,8 @@ object Graph {
       spreadKeys = Seq("ok")) // the pair-join key (r17 task-floor branch)
     // Support-1 pairs dominate the pair-count exchange (sf0.1: only 3,573
     // of 1,196,000 distinct pairs reach support 2) and partial aggregation
-    // cannot collapse distinct keys, so a TwoBloomDf dup-sketch prune
-    // (pairableShinglesBloom's trade) was MEASURED here: shuffle fell only
+    // cannot collapse distinct keys, so a two-bloom dup-sketch prune (one
+    // sketch pass, then a map-side probe) was MEASURED here: shuffle fell only
     // 18.3→16.8 MB — the os.distinct() exchange below, not the pair
     // count, is this plan's real shuffle mass — while runtime doubled
     // (1.96→3.98 s) on the sketch pass + second pair fan-out. Not shipped;

@@ -265,8 +265,6 @@ object MinHashDedup {
         s"graft: dedup cluster labels still moving after $maxRounds rounds " +
           "— returning best-effort (over-segmented) labels"
       )
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      Console.err.println(s"[cc] converged after $round contraction rounds")
     docs
       .select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")

@@ -41,9 +41,6 @@ object Retrieval {
     */
   private[graft] val QueryTerms = Seq("vector", "scan", "merge", "window")
 
-  private val K1 = 1.2
-  private val B  = 0.75
-
   /** (doc_id, score) for every doc matching ≥1 query term — the shared
     * scoring core of both declared ops. Okapi BM25:
     * idf = ln(1 + (N−df+0.5)/(df+0.5)), tf-norm with k1 = 1.2, b = 0.75.

@@ -127,8 +127,13 @@ object Text {
     * scale: hapax shingles dominate and the join is SMJ, where this
     * exchange is the join's own. A shuffle-BYTE reduction (vs compute
     * reduction) would additionally need map-side pruning — a bloom filter
-    * of df>=2 keys applied before the exchange — which is the documented
-    * extension if the pair stage's input ever dominates at 100 TB.
+    * of df>=2 keys applied before the exchange. Two such prunes were built,
+    * measured and not shipped: with exact keys, the df aggregation itself
+    * shuffles every distinct key, which costs about as much as the stream
+    * exchange it avoids; a constant-shuffle two-bloom (seen, dup) sketch
+    * cut the pair join's bytes more than 2x on a hapax-heavy corpus but
+    * costs one more evaluation of the stream, and this corpus's hapax tail
+    * is 0.08%. Revisit only if the pair stage's input dominates at 100 TB.
     *
     * The window's exchange plays a second, load-bearing role: it is the
     * MATERIALIZATION POINT AQE stage reuse dedups across the self-join's
@@ -141,86 +146,6 @@ object Text {
     sh.withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
       .filter(col("df") >= 2)
       .drop("df")
-
-  /** Map-side df>=2 prune with EXACT keys: a narrow (sh, count) aggregation
-    * finds df>=2 keys, folds them into a `bloom_filter_agg` sketch, and the
-    * raw stream probes it via `might_contain` before any pair-join
-    * exchange. Correctness matches [[pairableShingles]] exactly (bloom
-    * false positives admit pairless keys — harmless; false negatives
-    * impossible). Its flaw, MEASURED in BloomPruneSpec: the exact df
-    * aggregation itself shuffles every distinct key, and with per-row
-    * shuffle overhead that exchange costs about as much as the stream
-    * exchange the prune is trying to avoid — which is why the shipped
-    * scale path is the constant-shuffle [[pairableShinglesBloom]] below.
-    * Kept as the reference implementation the sketch variant is checked
-    * against.
-    *
-    * Not used by the declared queries: the synthetic corpus's hapax tail
-    * is 0.08% (see [[pairableShingles]]), so the window form is cheaper
-    * there and also serves as the self-join's materialization point.
-    */
-  private[graft] def pairableShinglesBloomExact(
-      sh: DataFrame,
-      expectedKeys: Long = 1L << 16,
-      numBits: Long = 1L << 20): DataFrame = {
-    // graft_bloom_agg / graft_might_contain wrap Spark's internal
-    // runtime-filter expressions (not in the public registry)
-    graft.functions.GraftFunctions.register(sh.sparkSession)
-    val bloom = sh
-      .groupBy("sh")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2)
-      .agg(expr(s"graft_bloom_agg(sh, ${expectedKeys}L, ${numBits}L)").as("bf"))
-    // might_contain requires its sketch as a constant or SCALAR SUBQUERY
-    // (the shape InjectRuntimeFilter itself emits): plan the 1-row sketch
-    // as a subquery the engine evaluates once and ships to every task.
-    val view = s"graft_bloom_keys_${bloomViewId.incrementAndGet()}"
-    bloom.createOrReplaceTempView(view)
-    sh.filter(expr(s"graft_might_contain((select bf from $view), sh)"))
-  }
-
-  private val bloomViewId = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Two-bloom duplicate-key sketch: one `treeAggregate` pass in which each
-    * task keeps (seen, dup) Bloom filters — `reduce` promotes a key already
-    * in `seen` to `dup`; `merge` takes `dup = dupA | dupB | (seenA & seenB)`.
-    * Bitwise AND of two same-shaped Bloom filters OVER-approximates the
-    * intersection of their key sets (every bit of a key present in both is
-    * set in both), so the result can only err toward false POSITIVES —
-    * exactly the safe direction for a prune — and a true df>=2 key always
-    * lands in `dup`: either both its occurrences hit one task (`reduce`
-    * promotes it) or they hit different tasks (the AND keeps it).
-    * Returns the serialized `dup` filter (spark-sketch stream format, the
-    * same bytes `might_contain` deserializes).
-    */
-  private[graft] def df2BloomSketch(sh: DataFrame, numBits: Long): Array[Byte] = {
-    import graft.functions.TwoBloomDf
-    import sh.sparkSession.implicits._
-    sh.select(col("sh"))
-      .as[Long]
-      .rdd
-      .treeAggregate(TwoBloomDf.zero(numBits))(TwoBloomDf.reduce, TwoBloomDf.merge)
-      .dupBytes
-  }
-
-  /** Constant-shuffle df>=2 prune: [[df2BloomSketch]]'s `dup` filter — built
-    * in one pass whose only cross-task traffic is fixed-size sketches —
-    * probed map-side as a CONSTANT via `might_contain`, so df=1 rows never
-    * reach any exchange. Same exactness argument as the sketch: false
-    * positives admit pairless keys (harmless), false negatives impossible,
-    * so downstream PAIRS equal [[pairableShingles]]'s exactly. Costs one
-    * extra evaluation of the (map-side) stream subtree to build the sketch
-    * — the 100 TB trade is one more corpus scan against shipping the hapax
-    * majority of the stream through the pair join's exchange
-    * (BloomPruneSpec measures both sides of that trade).
-    */
-  private[graft] def pairableShinglesBloom(
-      sh: DataFrame,
-      numBits: Long = 1L << 20): DataFrame = {
-    graft.functions.GraftFunctions.register(sh.sparkSession)
-    val dup = df2BloomSketch(sh, numBits)
-    sh.filter(call_function("graft_might_contain", lit(dup), col("sh")))
-  }
 
   /** Near-duplicate pairs by exact 3-shingle Jaccard >= 0.8 on normalized
     * text. Plan: shingle hashes → df>=2 prune → self-equi-join (a < b) →

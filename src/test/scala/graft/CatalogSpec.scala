@@ -43,20 +43,34 @@ class CatalogSpec extends SparkSpec {
   private def repoFile(name: String): String =
     new String(java.nio.file.Files.readAllBytes(repoPath(name)), java.nio.charset.StandardCharsets.UTF_8)
 
+  /** Scala files under src/main and src/test, other than `except`, in
+    * which `pattern` occurs. */
+  private def srcFilesMatching(pattern: scala.util.matching.Regex, except: String) = {
+    import scala.jdk.CollectionConverters._
+    Seq("src/main", "src/test").flatMap { d =>
+      val files = java.nio.file.Files.walk(repoPath(d))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filterNot(_.getFileName.toString == except).filter { f =>
+      pattern.findFirstIn(java.nio.file.Files.readString(f)).isDefined
+    }
+  }
+
   test("one session builder: no session is built outside Sessions.scala") {
     // every main and TestSession must go through Sessions.build; inline
     // copies of the session config drifted (core count, codegen cache,
     // nanosAsLong) each time one was written
-    import scala.jdk.CollectionConverters._
-    val builderCall = """SparkSession\s*\.\s*[Bb]uilder""".r
-    val offenders = Seq("src/main", "src/test").flatMap { d =>
-      val files = java.nio.file.Files.walk(repoPath(d))
-      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    }.filterNot(_.getFileName.toString == "Sessions.scala").filter { f =>
-      builderCall.findFirstIn(java.nio.file.Files.readString(f)).isDefined
-    }
+    val offenders = srcFilesMatching("""SparkSession\s*\.\s*[Bb]uilder""".r, "Sessions.scala")
     assert(offenders.isEmpty, s"session built outside Sessions.build in: ${offenders.mkString(", ")}")
+  }
+
+  test("one metrics listener: no listener is registered outside QueryMetrics.scala") {
+    // a listener read by polling its counter until it stops moving drops
+    // or misattributes stage events that arrive late; QueryMetrics.measure
+    // drains the bus instead
+    val listener = """(extends|with|new)\s+([\w.]+\.)?SparkListener\b|addSpark[L]istener""".r
+    val offenders = srcFilesMatching(listener, "QueryMetrics.scala")
+    assert(offenders.isEmpty, s"listener outside QueryMetrics in: ${offenders.mkString(", ")}")
   }
 
   test("SURVEY §2 lists every declared key (doc-drift lint)") {

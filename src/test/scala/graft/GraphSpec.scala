@@ -102,20 +102,8 @@ class GraphSpec extends SparkSpec {
     // input records, not on plan text.
     val expected =
       Tables.lineitem(spark, sfDir).count() + Tables.orders(spark, sfDir).count()
-    val acc = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        acc.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      run().count()
-      var prev = -1L
-      var tries = 0
-      while (acc.get != prev && tries < 50) { prev = acc.get; Thread.sleep(100); tries += 1 }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(acc.get == expected, s"read ${acc.get} records, expected $expected (scan re-execution)")
+    val read = QueryMetrics.measure(spark)(run().count())._2.inputRecords
+    assert(read == expected, s"read $read records, expected $expected (scan re-execution)")
   }
 
   test("graph_triangle_count: exact match vs in-memory recompute, handshake and clustering laws") {

@@ -27,25 +27,9 @@ class PairBudgetSpec extends SparkSpec {
     }
   }
 
-  /** Call sites of jobs launched while `body` runs (poll until the async
-    * listener bus drains — same technique as SparkSpec.shuffleBytes). */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        sites.add(j.stageInfos.map(_.name).mkString("|")); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      var tries = 0
-      while (sites.size != prev && tries < 30) { prev = sites.size; Thread.sleep(100); tries += 1 }
-    } finally spark.sparkContext.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    sites.asScala.toSeq
-  }
+  /** Stage names of each job launched while `body` runs. */
+  private def jobsDuring(body: => Unit): Seq[String] =
+    QueryMetrics.measure(spark)(body)._2.jobs.map(_.stages.mkString("|"))
 
   test("sumPairs equals the exact a<b pair-join row count on the closed-vocab fixture") {
     // GenData's default documents corpus IS the adversarial closed-vocab

@@ -15,30 +15,32 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir: String = TestSession.sfDir
+
+  /** A fresh directory under java.io.tmpdir, deleted with its contents when
+    * the test JVM exits (`deleteOnExit` skips non-empty directories). */
   def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-$name").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
+    val d = java.nio.file.Files.createTempDirectory(s"graft-$name")
+    SparkSpec.tmpDirs.add(d)
+    d.toAbsolutePath.toString
   }
 
   /** Total shuffle-write bytes across all stages of `action` (the measured
-    * backbone of ShuffleBudgetSpec/RuntimeFilterSpec). Listener delivery is
-    * async, so poll until the sum stabilizes.
+    * backbone of ShuffleBudgetSpec/RuntimeFilterSpec/ScalingLawSpec).
     */
-  protected def shuffleBytes(action: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        acc.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+  protected def shuffleBytes(action: => Unit): Long =
+    QueryMetrics.measure(spark)(action)._2.shuffleWriteBytes
+}
+
+object SparkSpec {
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  sys.addShutdownHook {
+    tmpDirs.forEach { d =>
+      if (java.nio.file.Files.exists(d)) {
+        val paths = java.nio.file.Files.walk(d)
+        try paths.sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        finally paths.close()
+      }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      action
-      var prev = -1L
-      var tries = 0
-      while (acc.get != prev && tries < 50) { prev = acc.get; Thread.sleep(100); tries += 1 }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    acc.get
   }
 }
