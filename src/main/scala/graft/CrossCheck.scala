@@ -313,7 +313,7 @@ object CrossCheck {
     val sfDir = args(0)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(',').toSet) else None
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+    val spark = Sessions.build(Sessions.hostCpus)
     // per-check nonempty-input probe (r14 ADVICE): the graph checks run on
     // the co-purchase edge stream, the semantic family on embeddings — a
     // vacuous both-empty agreement must be vouched for by ITS OWN input,

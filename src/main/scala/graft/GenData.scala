@@ -215,15 +215,16 @@ object GenData {
     * that triggers the regenerate-in-place hazard documented on
     * IvfAnn.cachedCentroids (dir-keyed session caches silently serving the
     * OLD corpus), so every write through GenData invalidates the writing
-    * session's centroid frames and pair-volume estimates itself instead of
-    * relying on the developer to remember the hook. Production paths are
-    * unaffected — a deployment versions its data dirs and never writes
-    * through GenData.
+    * session's centroid frames, pair-volume estimates and table schemas
+    * itself instead of relying on the developer to remember the hook.
+    * Production paths are unaffected — a deployment versions its data dirs
+    * and never writes through GenData.
     */
   def writeTable(outDir: String, name: String, df: DataFrame): Unit = {
     df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     graft.ops.IvfAnn.invalidateSessionCaches(df.sparkSession)
     graft.ops.PairBudget.invalidateSessionEstimates(df.sparkSession)
+    Tables.invalidateSessionSchemas(df.sparkSession)
   }
 
   def main(args: Array[String]): Unit = {

@@ -23,8 +23,7 @@ object PlanDump {
     val keys = args(0).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     keys.foreach(k => require(SparkEntry.queries.contains(k), s"unknown query key: $k"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.build(cpus, logLevel = "ERROR")
+    val spark = Sessions.build(Sessions.hostCpus, logLevel = "ERROR")
     val out = sys.env.get("GRAFT_PLAN_OUT")
     keys.foreach { key =>
       val df = SparkEntry.queries(key)(spark, sfDir)

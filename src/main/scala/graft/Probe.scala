@@ -17,7 +17,7 @@ object Probe {
     val confs = args(1).split(',').toSeq.filter(_ != "-").map(_.split("=", 2))
       .map { case Array(k, v) => (k, v) }
     val keys = args.drop(2).toSeq
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "ERROR")
+    val spark = Sessions.build(Sessions.hostCpus, "ERROR")
     val base = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     def setAll(on: Boolean): Unit =
       if (on) confs.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object SemProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.build(Sessions.hostCpus)
     graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val n = e.count()

@@ -29,6 +29,12 @@ import org.apache.spark.sql.SparkSession
   *    -Dspark.graft.reliableCheckpoints=true (see Checkpoints.stable).
   */
 object Sessions {
+  /** Core count of the dev mains (PlanDump, Probe, SemProbe, CrossCheck):
+    * SPARK_GRAFT_CPUS, or else this host's cores, so their timings and
+    * plans come from a session the size of the one the host can run. */
+  def hostCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   def build(cpus: String, logLevel: String = "WARN"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

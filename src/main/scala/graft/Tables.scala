@@ -2,14 +2,27 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import java.util.concurrent.ConcurrentHashMap
 
 /** One loader per test table (SURVEY.md §7.1).
   *
   * All reads go through here so scale-relevant read behavior (schema
   * expectations, the nanosecond-timestamp workaround for `events`) lives in
-  * exactly one place. Loaders return plain lazy DataFrames — no caching, no
-  * actions — so each query plan owns its scan and Catalyst can push
+  * exactly one place. Loaders return plain lazy DataFrames and run no
+  * action, so each query plan owns its scan and Catalyst can push
   * filters/projections into the Parquet scan per query.
+  *
+  * The one thing cached is each table's schema: the first read of a path
+  * in a session infers it with Spark's own reader (one footer job); every
+  * later read passes it back through `.schema(...)` and runs no job. File
+  * listing, rows and plans stay per read, and no DataFrame or relation is
+  * shared between reads (a shared relation would hand repeated reads the
+  * same attribute ids and break self-joins). So the loaders serve
+  * READ-ONLY inputs: a table rewritten in place mid-session keeps its old
+  * schema here until [[invalidateSessionSchemas]] runs (GenData.writeTable
+  * calls it). The write-then-read paths in `Sources` and `Streaming` read
+  * through `spark.read` directly, never through this cache.
   */
 object Tables {
 
@@ -31,20 +44,58 @@ object Tables {
     finally readLog.remove()
   }
 
+  /** Inferred schemas per session, keyed by path and the values of the
+    * parquet confs that shape inference, so a session that flips one of
+    * them gets the schema its own reader would infer. WEAKLY keyed on the
+    * SparkSession like IvfAnn's centroid cache; a StructType holds no
+    * reference back to the session, so a dead session's entries go with it.
+    */
+  private val schemaCache =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Seq[String], StructType]]()
+
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+  )
+
+  /** Dev hook for the regenerate-in-place hazard: forget every schema this
+    * session has resolved, so the next read infers again from disk. */
+  private[graft] def invalidateSessionSchemas(s: SparkSession): Unit =
+    schemaCache.synchronized { schemaCache.remove(s); () }
+
+  /** Read one table, inferring its schema only on the session's first read
+    * of the path (two racing first reads both infer, harmlessly). */
+  private def read(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = p(dir, name)
+    val key = path +: inferenceConfs.map(k => s.conf.getOption(k).orNull)
+    val schemas = schemaCache.synchronized(
+      schemaCache.computeIfAbsent(s, _ => new ConcurrentHashMap[Seq[String], StructType]()))
+    Option(schemas.get(key)) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None =>
+        val df = s.read.parquet(path)
+        schemas.put(key, df.schema)
+        df
+    }
+  }
+
   private def p(dir: String, name: String): String = {
     Option(readLog.get()).foreach(_ += name)
     s"$dir/$name.parquet"
   }
 
-  def region(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "region"))
-  def nation(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "nation"))
-  def customer(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "customer"))
-  def supplier(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "supplier"))
-  def part(s: SparkSession, dir: String): DataFrame     = s.read.parquet(p(dir, "part"))
-  def orders(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "orders"))
-  def lineitem(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "lineitem"))
-  def documents(s: SparkSession, dir: String): DataFrame  = s.read.parquet(p(dir, "documents"))
-  def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "embeddings"))
+  def region(s: SparkSession, dir: String): DataFrame     = read(s, dir, "region")
+  def nation(s: SparkSession, dir: String): DataFrame     = read(s, dir, "nation")
+  def customer(s: SparkSession, dir: String): DataFrame   = read(s, dir, "customer")
+  def supplier(s: SparkSession, dir: String): DataFrame   = read(s, dir, "supplier")
+  def part(s: SparkSession, dir: String): DataFrame       = read(s, dir, "part")
+  def orders(s: SparkSession, dir: String): DataFrame     = read(s, dir, "orders")
+  def lineitem(s: SparkSession, dir: String): DataFrame   = read(s, dir, "lineitem")
+  def documents(s: SparkSession, dir: String): DataFrame  = read(s, dir, "documents")
+  def embeddings(s: SparkSession, dir: String): DataFrame = read(s, dir, "embeddings")
 
   /** On-disk bytes of one table — a driver-side filesystem listing, no
     * Spark job. Scale-adaptive plans (Modeling.pairAggPartitions, r14) use
@@ -154,7 +205,7 @@ object Tables {
 
   private def rawEvents(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(p(dir, "events"))
+    read(s, dir, "events")
   }
 
   private def normalizeEvents(raw: DataFrame): DataFrame = {

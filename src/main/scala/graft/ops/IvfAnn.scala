@@ -567,8 +567,10 @@ object IvfAnn {
     * samples). Scale: cluster assignment is the broadcast-centroid pass
     * (corpus never shuffles for it), the mix is a (k × |langs|)-bounded
     * aggregate with map-side combine, and corpus totals are |langs|-row
-    * broadcasts. All integer-ppm arithmetic — fully hash-oracled on the
-    * shared training CTE.
+    * broadcasts. The per-cell totals `ct` (one row per cell) are broadcast
+    * explicitly too, so the build side of `m ⋈ ct` does not depend on
+    * which AQE stage finishes first. All integer-ppm arithmetic — fully
+    * hash-oracled on the shared training CTE.
     */
   private def corpusClusterMix(s: SparkSession, dir: String): DataFrame = {
     val cent = gridCentroids(s, dir)
@@ -584,7 +586,7 @@ object IvfAnn {
     val ct = m.groupBy("cid").agg(sum("n_docs").as("cid_docs"))
     val cl = dd.groupBy("lang").agg(count(lit(1)).as("lang_docs"))
     val nn = dd.agg(count(lit(1)).as("n"))
-    m.join(ct, "cid")
+    m.join(broadcast(ct), "cid")
       .join(broadcast(cl), "lang")
       .crossJoin(broadcast(nn))
       .select(
