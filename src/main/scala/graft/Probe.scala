@@ -2,11 +2,11 @@ package graft
 
 /** Dev instrument, not part of the driver contract: times declared keys
   * under a session-conf variant and lists their driver jobs. Each run is
-  * written to the `noop` sink, since `count()` lets Catalyst prune the
-  * query's work (agg_corr_exact at sf0.1, 4 cores: 0.22 s vs 7.5 s). One
-  * warm-up round per key and variant, then three interleaved base/conf
-  * rounds; prints per key and variant the median wall time and the last
-  * run's [[QueryMetrics.Snapshot]], then the last base run's jobs.
+  * timed by [[Bench.timeKey]], as Bench times it (full result into the
+  * `noop` sink). One warm-up round per key and variant, then three
+  * interleaved base/conf rounds; prints per key and variant the median wall
+  * time and the last run's [[QueryMetrics.Snapshot]], then the last base
+  * run's jobs.
   *
   * Usage: runMain graft.Probe <sfDir> <confKey=val[,key=val...]|-> <key> [key...]
   *   ("-" = no conf override, i.e. a plain A/A control)
@@ -24,11 +24,8 @@ object Probe {
       else base.foreach { case (k, ov) => ov.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     val runs = for (round <- 0 to 3; variant <- Seq("base", "conf"); k <- keys) yield {
       setAll(variant == "conf")
-      val (secs, m) = QueryMetrics.measure(spark) {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(k)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val (secs, m) = Bench.timeKey(spark, SparkEntry.queries(k)(spark, sfDir))
+        .getOrElse(sys.error(s"$k failed under the $variant variant"))
       setAll(false)
       (round, variant, k, secs, m)
     }

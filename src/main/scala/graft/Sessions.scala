@@ -29,9 +29,10 @@ import org.apache.spark.sql.SparkSession
   *    -Dspark.graft.reliableCheckpoints=true (see Checkpoints.stable).
   */
 object Sessions {
-  /** Core count of the dev mains (PlanDump, Probe, SemProbe, CrossCheck):
-    * SPARK_GRAFT_CPUS, or else this host's cores, so their timings and
-    * plans come from a session the size of the one the host can run. */
+  /** Core count of Bench and the dev mains (PlanDump, Probe, SemProbe,
+    * CrossCheck): SPARK_GRAFT_CPUS, or else this host's cores, so their
+    * timings and plans come from a session the size of the one the host
+    * can run. */
   def hostCpus: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 

@@ -1,15 +1,28 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.desc
 
-/** Bench's normalization predicate: the canary's quiet reference was
-  * measured on sf0.1 at local[32], so only that run may be divided by it.
+/** [[Bench.timeKey]] times a key's full result, not a plan Catalyst pruned
+  * for `count()`, and returns a snapshot of the work it ran.
   */
-class BenchSpec extends AnyFunSuite {
-  test("normalizable only on the sf0.1 tables at 32 cpus") {
-    assert(Bench.normalizable("/data/sf0.1", "32"))
-    assert(!Bench.normalizable("/data/sf0.1", "4"))
-    assert(!Bench.normalizable("/data/sf0.125", "32"))
-    assert(!Bench.normalizable("/data/sf0.01", "32"))
+class BenchSpec extends SparkSpec {
+  test("timeKey writes the sort that count() lets the optimizer drop") {
+    val df = spark.range(200000).orderBy(desc("id")).toDF()
+    val countBytes = QueryMetrics.measure(spark)(df.count())._2.shuffleWriteBytes
+    val (_, m) = Bench.timeKey(spark, df).get
+    assert(m.shuffleWriteBytes > 0 && m.shuffleWriteBytes >= 10 * countBytes,
+      s"timeKey wrote ${m.shuffleWriteBytes} shuffle bytes, count() $countBytes")
+  }
+
+  test("a key that ran reports at least one job and 0 < CPU-s <= wall x cores") {
+    val (secs, m) = Bench.timeKey(spark, SparkEntry.queries("agg_groupby_pricing")(spark, sfDir)).get
+    val cores = spark.sparkContext.defaultParallelism
+    assert(m.jobs.nonEmpty, s"$m")
+    assert(m.cpuNs > 0 && m.cpuNs / 1e9 <= secs * cores, s"cpu ${m.cpuNs} ns, wall $secs s, $cores cores")
+  }
+
+  test("a query that fails on a live context is None, not a time") {
+    assert(Bench.timeKey(spark, spark.table("graft_no_such_table")).isEmpty)
+    assert(!spark.sparkContext.isStopped)
   }
 }

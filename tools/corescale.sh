@@ -15,7 +15,11 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
-cd /root/repo
+cd "$(dirname "$0")/.."
+# Heap: SPARK_DRIVER_MEM, or else half of RAM clamped to 2g..8g, the rule of
+# build.sbt and the tier-1 test command (a fixed large -Xmx gets the JVM
+# OOM-killed on a small host).
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}"
 # r15 ADVICE: a failed run must not silently inherit the previous
 # iteration's bench.json — remove it first, check the java exit status, and
 # make the report tolerate core-counts that are missing or partial.
@@ -24,7 +28,7 @@ for C in 4 8 16 32; do
   rm -f bench.json
   if ! SPARK_GRAFT_CPUS=$C SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_BENCH_KEYS="$KEYS" \
     java -XX:+IgnoreUnrecognizedVMOptions -XX:ReservedCodeCacheSize=2g $ADD_OPENS \
-    -Xmx48g -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench \
+    -Xmx"$MEM" -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench \
     > "${OUT}_c${C}.log" 2>&1; then
     echo "[corescale] cores=$C FAILED (rc=$?) — see ${OUT}_c${C}.log; skipping" >&2
     rm -f "${OUT}_c${C}.json"
