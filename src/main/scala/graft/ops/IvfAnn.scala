@@ -7,21 +7,25 @@ import org.apache.spark.sql.expressions.Window
 
 /** IVF (inverted-file) approximate nearest neighbors — the data-DEPENDENT
   * scale path, complementing the data-independent sign-bit LSH in LshAnn:
-  * a coarse quantizer (k centroids, trained by distributed Lloyd
-  * iterations) partitions the corpus into k inverted lists; a probe scores
-  * only the `nprobe` lists whose centroids it is closest to. Candidate
-  * work is ~(nprobe/k)·|corpus| per probe instead of |corpus|; recall
-  * depends on list balance and nprobe and is measured in IvfSpec.
+  * a coarse quantizer (k centroids) partitions the corpus into k inverted
+  * lists; a probe scores only the `nprobe` lists whose centroids it is
+  * closest to. Candidate work is ~(nprobe/k)·|corpus| per probe instead of
+  * |corpus|; recall depends on list balance and nprobe and is measured in
+  * IvfSpec and EvaluationSpec.
   *
-  * Everything is DataFrame ops: assignment is a broadcast join of the k
-  * centroids + per-vector arg-max (cosine ≡ dot on normalized inputs, via
-  * the native codegen kernel); the Lloyd update is an elementwise mean —
-  * posexplode to (cluster, dim) grain, avg, re-assemble, L2-normalize.
-  * Centroid seeds are the first k corpus vectors (deterministic); the mean
-  * is a float aggregation, so training is deterministic only up to
-  * summation order — fine for an index (assignment changes of borderline
-  * vectors shift recall marginally, never correctness of returned scores,
-  * which are always exact re-ranks).
+  * One k-means and one router serve every consumer. [[trainGrid]] runs
+  * exact Lloyd iterations on the 1e-6 integer grid ([[grid6]]): the seeds
+  * are the k smallest vec_ids, and each step routes every vector to its
+  * nearest centroid and moves each centroid to the integer mean (sum div
+  * count) of its list. Every step is integer arithmetic with pinned
+  * tie-breaks, so the trained index is bit-identical to the DuckDB
+  * oracle's CTE chain. [[routeToCells]] is the one place a vector meets
+  * the centroids: a cross join against the centroid arrays, the exact
+  * int64 squared-L2 of the `graft_l2sq` kernel, and the nearest cell(s),
+  * ties to the lower cid. k is either fixed ([[GridK]], the index of the
+  * sim_ann_ivf family and its consumers) or grows with the corpus
+  * ([[CellTarget]], the semantic-dedup cells). Returned scores are always
+  * exact re-ranks.
   */
 object IvfAnn {
 
@@ -90,84 +94,11 @@ object IvfAnn {
       }
     }
 
-  /** Route each vector to its topN nearest centroids (ties to the lower
-    * centroid id). ONE implementation for both assignment (topN = 1) and
-    * probe routing (topN = nprobe) so tie-breaks can never diverge.
-    * The topN = 1 path aggregates with max_by instead of a window: the k
-    * scored rows collapse map-side (partial aggregation) before any
-    * exchange — a k-fold shuffle reduction on the corpus-sized side.
-    */
-  def route(vecs: DataFrame, idCol: String, vecCol: String, centroids: DataFrame, topN: Int): DataFrame = {
-    GraftFunctions.register(vecs.sparkSession)
-    val scored = vecs
-      .crossJoin(broadcast(centroids)) // k rows per vector
-      .withColumn("__sim", Vectors.nativeDot(col(vecCol), col("cvec_c")))
-    if (topN == 1)
-      scored
-        .groupBy(col(idCol), col(vecCol))
-        .agg(max_by(col("cid"), struct(col("__sim"), -col("cid"))).as("cid"))
-    else {
-      val w = Window.partitionBy(col(idCol)).orderBy(col("__sim").desc, col("cid"))
-      scored
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= topN)
-        .select(col(idCol), col(vecCol), col("cid"))
-    }
-  }
-
-  /** Nearest-centroid id per vector. */
-  def assign(vecs: DataFrame, idCol: String, vecCol: String, centroids: DataFrame): DataFrame =
-    route(vecs, idCol, vecCol, centroids, topN = 1)
-
-  /** One distributed Lloyd step: elementwise mean of each cluster's members,
-    * L2-normalized back onto the unit sphere (inputs are normalized, so
-    * cosine stays ≡ dot).
-    */
-  def lloydStep(corpus: DataFrame, vecCol: String, centroids: DataFrame): DataFrame = {
-    val assigned = assign(corpus, "cand_id", vecCol, centroids)
-    val dims = assigned
-      .select(col("cid"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy("cid", "pos")
-      .agg(avg(col("x")).as("m"))
-    val means = dims
-      .groupBy("cid")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cid"), expr("transform(pm, p -> p.m)").as("raw"))
-    val updated = means
-      .withColumn("norm", sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
-      .select(
-        col("cid"),
-        expr("transform(raw, x -> cast(x / norm AS FLOAT))").as("cvec_new"),
-      )
-    // a centroid whose list went empty has no mean — keep its previous
-    // position instead of silently dropping it (train must return k lists)
-    centroids
-      .join(updated, Seq("cid"), "left")
-      .select(col("cid"), coalesce(col("cvec_new"), col("cvec_c")).as("cvec_c"))
-  }
-
-  /** Train a k-centroid coarse quantizer: seed with the first k corpus
-    * vectors (deterministic), run `iters` Lloyd steps.
-    */
-  def train(corpus: DataFrame, k: Int, iters: Int = 2): DataFrame = {
-    val seed = corpus
-      .orderBy("cand_id")
-      .limit(k)
-      .select(monotonicallyStableCid(k), col("cvec").as("cvec_c"))
-    (1 to iters).foldLeft(seed)((c, _) => lloydStep(corpus, "cvec", c))
-  }
-
-  // row_number over a 16-row frame; deterministic because cand_id is ordered
-  private def monotonicallyStableCid(k: Int) = {
-    val w = Window.orderBy(col("cand_id"))
-    (row_number().over(w) - 1).as("cid")
-  }
-
   // ---------------------------------------------------------------------
-  // Integer-grid IVF — the DECLARED, fully-oracled variant
+  // Integer-grid k-means: one Lloyd loop, one router
   // ---------------------------------------------------------------------
 
-  private val GridK = 16
+  private[graft] val GridK = 16
   private val GridIters = 2
   // r14 (verdict #2): the catalog default now IS the published operating
   // point — sim_ann_ivf_recall_curve proves recall@10 = 0.93–0.96 at
@@ -183,9 +114,7 @@ object IvfAnn {
     * distances are exact int64 sums (|x6| ≤ ~1e6, 64 dims ⇒ ≤ 2.6e14), and
     * the Lloyd mean is an integer `div` — so TRAINING ITSELF is
     * bit-identical cross-engine, which is what lets the whole IVF path be
-    * hash-gated where the float-mean variant ([[train]]) could only ever be
-    * rows-only. The float variant stays as the raw-throughput path
-    * (IvfSpec); the declared query IS this grid variant.
+    * hash-gated.
     */
   private[ops] def grid6(e: DataFrame): DataFrame =
     e.select(
@@ -193,6 +122,15 @@ object IvfAnn {
       posexplode(expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1e6, 0) AS BIGINT))"))
         .as(Seq("dim", "x6")),
     ).select(col("vec_id"), col("dim").cast("long").as("dim"), col("x6"))
+
+  /** Array-form grid view (vec_id, x6a): the same integers as [[grid6]],
+    * one array per vector — the graft_l2sq kernel's input shape.
+    */
+  private def toX6a(e: DataFrame): DataFrame =
+    e.select(
+      col("vec_id"),
+      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1e6, 0) AS BIGINT))").as("x6a"),
+    )
 
   /** Centroid ARRAYS (cid, c6a) of a long-form (cid, dim, c6) frame —
     * dim-sorted, the graft_l2sq kernel's input shape. K-row aggregate.
@@ -202,100 +140,28 @@ object IvfAnn {
       .groupBy("cid")
       .agg(expr("transform(array_sort(collect_list(struct(dim, c6))), s -> s.c6)").as("c6a"))
 
-  /** Exact nearest-centroid id per vector on the grid (ties → lower cid).
+  /** The router: each (vec_id, embedding) vector to its `probes` nearest
+    * cells of a (cid, c6a) centroid-array frame by exact int64 grid
+    * distance, ties to the lower cid. Training, inverted lists, probe
+    * routing and incremental batches all route here, so tie-breaks cannot
+    * diverge between them. probes = 1 gives (vec_id, cid) through min_by
+    * (partial aggregation map-side); probes > 1 gives (vec_id, cid, rn),
+    * rn the route rank from the K-bounded per-vector window — the recall
+    * curve and the IVF-PQ probe stage read it, other callers project it
+    * away.
     *
-    * r17: runs through the codegen'd [[graft.functions.L2Dist2]] kernel
-    * over ARRAY-form grids — one aggregate (min_by, partial map-side)
-    * instead of the long-form per-dim join's two (per-(vec, cid) distance
-    * sum, then per-vec argmin). Same integers in the same order — the
-    * kernel's Σ(a_i−b_i)² over dim-sorted arrays IS the old per-dim
-    * grouped sum — and the same (dist2, cid) tie-break, so assignments are
-    * bit-identical; what changes is one exchange/AQE stage per assignment
-    * call, on keys whose sf0.1 cost is the serial stage chain (measured:
-    * sim_ann_ivf = 26 driver jobs averaging ~140 ms of wall each). This is
-    * the dynamic-K path's [[routeToCells]] shape, adopted by the fixed-K
-    * path; the long-form grid survives only at the Lloyd-mean grain
-    * (per-(cid, dim) integer averages), as in [[gridCentroidArraysOf]].
-    */
-  private[ops] def gridAssign(e: DataFrame, cent: DataFrame): DataFrame = {
-    GraftFunctions.register(e.sparkSession)
-    toX6a(e)
-      .crossJoin(centArraysOf(cent))
-      .select(
-        col("vec_id"),
-        col("cid"),
-        call_function("graft_l2sq", col("x6a"), col("c6a")).as("dist2"),
-      )
-      .groupBy("vec_id")
-      .agg(min_by(col("cid"), struct(col("dist2"), col("cid"))).as("cid"))
-  }
-
-  /** One exact Lloyd step: integer-mean (sum div count) per (cid, dim);
-    * a centroid whose list went empty keeps its previous position.
-    * Assignment via the kernel ([[gridAssign]]); the per-dim grid `g`
-    * serves only the mean aggregate.
-    */
-  private def gridStep(e: DataFrame, g: DataFrame, cent: DataFrame): DataFrame = {
-    val upd = gridAssign(e, cent)
-      .join(g, "vec_id")
-      .groupBy("cid", "dim")
-      .agg(expr("sum(x6) div count(1)").as("c6n"))
-    cent
-      .join(upd, Seq("cid", "dim"), "left")
-      .select(col("cid"), col("dim"), coalesce(col("c6n"), col("c6")).as("c6"))
-  }
-
-  // ---------------- dynamic-K cells (the SemDeDup bucketing, r10) ----------------
-
-  /** Target cell occupancy for [[gridCellsOf]]: K = max(4, n / 250). The
-    * r10 sf1 growth study measured the sign-LSH candidate path of
-    * dedup_semantic growing ∝ n²/2^bits (16 fixed buckets/table ⇒ 2452 MB
-    * shuffle at sf1 from 1.2 MB at sf0.1); cells whose COUNT grows with
-    * the corpus keep same-cell candidate pairs ≈ n·target/2 — linear in n
-    * at fixed occupancy. This is the bucketing real semantic-dedup
-    * pipelines use (k-means cells, within-cell pairwise).
-    */
-  private[ops] val CellTarget = 250L
-
-  /** Dynamic-K exact grid k-means cell assignment over an arbitrary
-    * (vec_id, embedding) frame: K = max(4, n/[[CellTarget]]) — n enters
-    * as ONE driver scalar (count of row-group metadata, the same O(1)
-    * metadata class as the cluster loop's fixpoint sum), seeds = the K
-    * smallest vec_ids, [[GridIters]] integer Lloyd steps.
+    * Distances run through the codegen'd [[graft.functions.L2Dist2]]
+    * kernel over ARRAY-form grids — an n·K-row join with d fused ops per
+    * row. A long-form per-dim join (n·K·d ROWS per assignment) computes the
+    * same integers in the same order, and the r10 sf1 study measured it
+    * slower than the quadratic LSH path the dynamic-K cells replace (92 s
+    * vs 60 s at sf1). The long-form grid survives only at the Lloyd-mean
+    * grain (per-(cid, dim) integer averages in [[trainGrid]]).
     *
-    * `probes` (r11, the multi-probe refinement): the FINAL assignment
-    * routes each vector to its `probes` nearest cells (ties → lower cid),
-    * one output row per (vector, cell). Training always single-assigns —
-    * multi-probe is a candidate-generation refinement, not a different
-    * quantizer — so probes > 1 changes recall (boundary pairs whose
-    * members share a 2nd-nearest cell become candidates) without touching
-    * the trained centroids. Candidate volume scales ×probes² worst case,
-    * still linear in n at fixed occupancy.
-    *
-    * Assignment runs through the codegen'd [[graft.functions.L2Dist2]]
-    * kernel over ARRAY-form integer grids — an n·K-row join with d fused
-    * ops per row. The first cut reused the long-form per-dim join
-    * (n·K·d ROWS per assignment) and the r10 sf1 study measured it SLOWER
-    * than the quadratic LSH path it exists to replace (92 s vs 60 s at
-    * sf1); the kernel form is the same integers in the same order, just
-    * without materializing a row per (vector, centroid, dim). The
-    * long-form grid survives only where it is the right grain: the Lloyd
-    * mean (per-(cid, dim) integer average). No broadcast HINT on the
-    * centroid side: K grows with the corpus, so whether K arrays still
-    * broadcast is AQE's size-based call, not a hardcoded promise.
-    */
-  private def toX6a(e: DataFrame): DataFrame =
-    e.select(
-      col("vec_id"),
-      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1e6, 0) AS BIGINT))").as("x6a"),
-    )
-
-  /** Route arbitrary (vec_id, embedding) vectors to their `probes` nearest
-    * cells of a trained (cid, c6a) centroid-array frame — the reusable
-    * second half of [[gridCellsOf]], exposed (r11) so incremental
-    * consumers can route a BATCH against centroids trained on the seen
-    * corpus. probes = 1 keeps the min_by shape (map-side partial
-    * aggregation); probes > 1 ranks the K-bounded per-vector window.
+    * No broadcast hint here: the centroid side is whatever the caller
+    * passes, and for the dynamic-K cells K grows with the corpus, so
+    * whether K arrays still broadcast is AQE's size-based call, not a
+    * hardcoded promise.
     */
   private[graft] def routeToCells(vecs: DataFrame, centA: DataFrame, probes: Int): DataFrame = {
     GraftFunctions.register(vecs.sparkSession)
@@ -311,30 +177,28 @@ object IvfAnn {
         .groupBy("vec_id")
         .agg(min_by(col("cid"), struct(col("dist2"), col("cid"))).as("cid"))
     else {
-      // multi-probe final routing: top-`probes` cells per vector. A window
-      // instead of min_by — the scored frame is the same n·K join either
-      // way; the window's per-vector sort is K-bounded.
       val w = Window.partitionBy("vec_id").orderBy(col("dist2"), col("cid"))
       scored
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= probes)
-        .select("vec_id", "cid")
+        .select("vec_id", "cid", "rn")
     }
   }
 
-  /** Train the dynamic-K grid k-means on `e` and return the centroid
-    * ARRAYS (cid, c6a), checkpointed — the persisted-index half of
-    * [[gridCellsOf]], exposed (r11) for incremental consumers.
+  /** Exact grid k-means over (vec_id, embedding) vectors: seed centroids =
+    * the k smallest vec_ids (cid in vec_id order), [[GridIters]] integer
+    * Lloyd steps — route to the nearest centroid, then sum div count per
+    * (cid, dim); a centroid whose list went empty keeps its previous
+    * position. Returns the long-form (cid, dim, c6) frame, checkpointed so
+    * downstream consumers never replay training lineage. Pure plan builder
+    * — callers decide whether to cache it.
     */
-  private[graft] def gridCentroidArraysOf(e: DataFrame, target: Long = CellTarget): DataFrame = {
-    GraftFunctions.register(e.sparkSession)
-    val n = e.count()
-    val k = math.max(4L, n / target)
+  private[graft] def trainGrid(e: DataFrame, k: Int): DataFrame = {
     val g = grid6(e) // long-form: per-dim grain for the Lloyd means only
     val seedW = Window.orderBy("vec_id") // bounded: runs on the k-row limit frame
     val seedIds = e
       .orderBy("vec_id")
-      .limit(k.toInt)
+      .limit(k)
       .select(col("vec_id"), (row_number().over(seedW) - 1).cast("long").as("cid"))
     val c0 = seedIds.join(g, "vec_id").select(col("cid"), col("dim"), col("x6").as("c6"))
     def step(cent: DataFrame): DataFrame = {
@@ -349,21 +213,54 @@ object IvfAnn {
     (1 to GridIters)
       .foldLeft(c0)((c, _) => step(c))
       .transform(Checkpoints.stable(_))
-      .transform(centArraysOf)
   }
 
-  /** Cell assignment with optionally SESSION-CACHED training (r13): a
-    * caller that knows its input frame's stable identity (the declared
-    * keys: full embeddings of a data dir) passes `cacheKey = Some(id)` and
-    * the trained centroid arrays are served from the session index cache —
-    * the decontaminate_semantic / gridCentroids amortization, now shared
-    * by every dynamic-K consumer of the same corpus (dedup_semantic,
-    * dedup_semantic_ivf, mine_hard_negatives train IDENTICAL centroids:
-    * training is probe-independent). Identity stays the CALLER's problem
-    * on purpose — keying on the DataFrame's plan would silently alias
-    * distinct synthetic frames in specs. Values are unchanged cold or warm
-    * (training is a pure function of the rows; every Verify session's
-    * first execution still exercises it against the oracle hash).
+  // ---------------- dynamic-K cells (the SemDeDup bucketing, r10) ----------------
+
+  /** Target cell occupancy for [[gridCellsOf]]: K = max(4, n / 250). The
+    * r10 sf1 growth study measured the sign-LSH candidate path of
+    * dedup_semantic growing ∝ n²/2^bits (16 fixed buckets/table ⇒ 2452 MB
+    * shuffle at sf1 from 1.2 MB at sf0.1); cells whose COUNT grows with
+    * the corpus keep same-cell candidate pairs ≈ n·target/2 — linear in n
+    * at fixed occupancy. This is the bucketing real semantic-dedup
+    * pipelines use (k-means cells, within-cell pairwise).
+    */
+  private[graft] val CellTarget = 250L
+
+  /** Train the dynamic-K grid k-means on `e` and return the centroid
+    * ARRAYS (cid, c6a) — the persisted-index half of [[gridCellsOf]],
+    * exposed (r11) for incremental consumers. K = max(4, n/target): n
+    * enters as ONE driver scalar (count of row-group metadata, the same
+    * O(1) metadata class as the cluster loop's fixpoint sum).
+    */
+  private[graft] def gridCentroidArraysOf(e: DataFrame, target: Long = CellTarget): DataFrame = {
+    val k = math.max(4L, e.count() / target)
+    centArraysOf(trainGrid(e, k.toInt))
+  }
+
+  /** Dynamic-K cell assignment of an arbitrary (vec_id, embedding) frame:
+    * [[gridCentroidArraysOf]] then [[routeToCells]], as (vec_id, cid).
+    *
+    * `probes` (r11, the multi-probe refinement): the FINAL assignment
+    * routes each vector to its `probes` nearest cells (ties → lower cid),
+    * one output row per (vector, cell). Training always single-assigns —
+    * multi-probe is a candidate-generation refinement, not a different
+    * quantizer — so probes > 1 changes recall (boundary pairs whose
+    * members share a 2nd-nearest cell become candidates) without touching
+    * the trained centroids. Candidate volume scales ×probes² worst case,
+    * still linear in n at fixed occupancy.
+    *
+    * Optionally SESSION-CACHED training (r13): a caller that knows its
+    * input frame's stable identity (the declared keys: full embeddings of a
+    * data dir) passes `cacheKey = Some(id)` and the trained centroid arrays
+    * are served from the session index cache — shared by every dynamic-K
+    * consumer of the same corpus (dedup_semantic, dedup_semantic_ivf,
+    * mine_hard_negatives train IDENTICAL centroids: training is
+    * probe-independent). Identity stays the CALLER's problem on purpose —
+    * keying on the DataFrame's plan would silently alias distinct synthetic
+    * frames in specs. Values are unchanged cold or warm (training is a pure
+    * function of the rows; every Verify session's first execution still
+    * exercises it against the oracle hash).
     */
   private[graft] def gridCellsOf(
       e: DataFrame,
@@ -376,7 +273,7 @@ object IvfAnn {
         cachedCentroids(e.sparkSession, s"cellsA:$target:$id")(gridCentroidArraysOf(e, target))
       case None => gridCentroidArraysOf(e, target)
     }
-    routeToCells(e, centA, probes)
+    routeToCells(e, centA, probes).select("vec_id", "cid")
   }
 
   /** DuckDB mirror of [[gridCellsOf]] on the `embeddings` table — a CTE
@@ -425,67 +322,44 @@ object IvfAnn {
       s"row_number() OVER (PARTITION BY vec_id ORDER BY dist2, cid) AS rn FROM ${n("d_fin")}) WHERE rn <= $probes)"
   }
 
-  /** Exact grid k-means training: seed centroids = the k smallest vec_ids
-    * (cid in vec_id order), `GridIters` integer Lloyd steps, checkpointed so
-    * downstream consumers never replay training lineage. Pure plan builder —
-    * callers decide whether to cache it ([[gridCentroids]]) or rebuild per
-    * execution (the self-contained fused key).
-    */
-  private[ops] def trainGridCentroids(s: SparkSession, dir: String): DataFrame = {
-    // task-floor spread (r17): grid6 fans each vector into 64 dim rows and
-    // every Lloyd step pushes them through a ×K join + two aggregates whose
-    // PARTIAL (map-side) halves run on the scan's split count — one split at
-    // dev scale ⇒ single-task training.
-    val e = graft.Tables.spreadSmallScan(
-      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
-    val g = grid6(e)
-    val seedW = Window.orderBy("vec_id") // bounded: runs on the k-row limit frame
-    val seedIds = e
-      .orderBy("vec_id")
-      .limit(GridK)
-      .select(col("vec_id"), (row_number().over(seedW) - 1).cast("long").as("cid"))
-    val c0 = seedIds.join(g, "vec_id").select(col("cid"), col("dim"), col("x6").as("c6"))
-    (1 to GridIters)
-      .foldLeft(c0)((c, _) => gridStep(e, g, c))
-      .transform(Checkpoints.stable(_))
-  }
+  // ---------------- fixed-K index (the sim_ann_ivf family) ----------------
 
-  /** Build-once centroids: the trained grid index, cached per
-    * (session, dir) through the same weak cache as the float path — the
-    * FIRST consumer in a session trains and checkpoints, every later
+  /** The embeddings of `dir`, task-floor spread (r17): grid6 fans each
+    * vector into 64 dim rows, and training, inverted-list assignment and
+    * the exact re-rank dots are compute-dense map work whose partial
+    * halves run on the scan's split count — one split at dev scale.
+    */
+  private def gridEmbeddings(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.spreadSmallScan(s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
+
+  /** Build-once centroids: the trained [[GridK]] grid index of `dir`,
+    * cached per (session, dir) in the weak index cache — the FIRST
+    * consumer in a session trains and checkpoints, every later
     * `sim_ann_ivf_probe` execution reuses the materialized 1024-row frame
     * without touching the corpus. This is the deployment shape of a real
     * vector-search index (build once, probe many); the fused `sim_ann_ivf`
     * key deliberately bypasses this cache to stay self-contained.
     */
   def gridCentroids(s: SparkSession, dir: String): DataFrame =
-    cachedCentroids(s, "grid6:" + dir)(trainGridCentroids(s, dir))
+    cachedCentroids(s, "grid6:" + dir)(trainGrid(gridEmbeddings(s, dir), GridK))
 
-  /** Probe routing with the route rank kept: each probe's `maxNprobe`
-    * nearest cells by exact integer grid distance (ties → lower cid), as
-    * (probe_id, cid, rnp). ONE implementation serves the declared
-    * fused/probe keys (rnp ≤ [[GridNprobe]]) AND the recall curve (rnp
+  /** Fixed-K routing: each vector of `e` to its `probes` nearest cells of
+    * the long-form [[GridK]] index `cent`, through [[routeToCells]].
+    */
+  private[graft] def gridAssign(e: DataFrame, cent: DataFrame, probes: Int = 1): DataFrame =
+    routeToCells(e, centArraysOf(cent), probes)
+
+  /** Probe routing with the route rank kept: each probe's (vec_id < 100)
+    * `maxNprobe` nearest cells as (probe_id, cid, rnp), maxNprobe > 1. ONE
+    * implementation serves the declared fused/probe keys (rnp ≤
+    * [[GridNprobe]]), the IVF-PQ probe stage and the recall curve (rnp
     * kept, up to the curve's max) — r13 ADVICE: the curve previously
     * re-implemented this stage, so it could drift from the index whose
     * operating point it publishes.
     */
-  private[graft] def gridRoutes(e: DataFrame, cent: DataFrame, maxNprobe: Int): DataFrame = {
-    GraftFunctions.register(e.sparkSession)
-    val routeW = Window.partitionBy("vec_id").orderBy(col("dist2"), col("cid"))
-    // kernel-array distances (r17, the gridAssign rationale): one window
-    // stage instead of a per-dim grouped sum feeding the window — same
-    // exact int64 dist2, same (dist2, cid) rank order
-    toX6a(e.filter(col("vec_id") < 100))
-      .crossJoin(centArraysOf(cent))
-      .select(
-        col("vec_id"),
-        col("cid"),
-        call_function("graft_l2sq", col("x6a"), col("c6a")).as("dist2"),
-      )
-      .withColumn("rnp", row_number().over(routeW).cast("long"))
-      .filter(col("rnp") <= maxNprobe)
-      .select(col("vec_id").as("probe_id"), col("cid"), col("rnp"))
-  }
+  private[graft] def gridRoutes(e: DataFrame, cent: DataFrame, maxNprobe: Int): DataFrame =
+    gridAssign(e.filter(col("vec_id") < 100), cent, maxNprobe)
+      .select(col("vec_id").as("probe_id"), col("cid"), col("rn").cast("long").as("rnp"))
 
   /** Probe stage shared by the fused and split keys: corpus assignment =
     * the inverted lists, probes routed to their `GridNprobe` nearest lists,
@@ -493,10 +367,7 @@ object IvfAnn {
     */
   private def gridProbeStage(s: SparkSession, dir: String, cent: DataFrame): DataFrame = {
     GraftFunctions.register(s)
-    // task-floor spread (r17): the inverted-list assignment and the exact
-    // re-rank dots are compute-dense map work
-    val e = graft.Tables.spreadSmallScan(
-      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
+    val e = gridEmbeddings(s, dir)
     val lists = gridAssign(e, cent).select(col("vec_id").as("cand_id"), col("cid"))
     val routes = gridRoutes(e, cent, GridNprobe).select("probe_id", "cid")
     val pv = e.filter(col("vec_id") < 100).select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
@@ -529,7 +400,7 @@ object IvfAnn {
     * readers don't compare the two as like-for-like.
     */
   private[ops] def simAnnIvfGrid(s: SparkSession, dir: String): DataFrame =
-    gridProbeStage(s, dir, trainGridCentroids(s, dir))
+    gridProbeStage(s, dir, trainGrid(gridEmbeddings(s, dir), GridK))
 
   /** Index-build key: the trained centroid grid joined with its
     * inverted-list occupancy — (cid, dim, c6, list_n), 16×64 rows. This IS
@@ -539,8 +410,7 @@ object IvfAnn {
     */
   private def simAnnIvfBuild(s: SparkSession, dir: String): DataFrame = {
     val cent = gridCentroids(s, dir)
-    val e = graft.Tables.spreadSmallScan(
-      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
+    val e = gridEmbeddings(s, dir)
     val ln = gridAssign(e, cent).groupBy("cid").agg(count(lit(1)).as("list_n"))
     cent
       .join(ln, Seq("cid"), "left")
@@ -574,8 +444,7 @@ object IvfAnn {
     */
   private def corpusClusterMix(s: SparkSession, dir: String): DataFrame = {
     val cent = gridCentroids(s, dir)
-    val e = graft.Tables.spreadSmallScan(
-      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
+    val e = gridEmbeddings(s, dir)
     val dd = gridAssign(e, cent)
       .join(
         graft.Tables.documents(s, dir).select(col("doc_id").as("vec_id"), col("lang")),
@@ -622,8 +491,7 @@ object IvfAnn {
     */
   private def embedClusterDrift(s: SparkSession, dir: String): DataFrame = {
     val cent = gridCentroids(s, dir)
-    val e = graft.Tables.spreadSmallScan(
-      s, dir, "embeddings", graft.Tables.embeddings(s, dir), col("vec_id"))
+    val e = gridEmbeddings(s, dir)
     val lists = gridAssign(e, cent)
     val mx = e.agg(max("vec_id").as("mxid"))
     val c = lists
@@ -772,27 +640,4 @@ object IvfAnn {
     graft.QueryDef("corpus_cluster_mix", corpusClusterMix, Some(corpusClusterMixSql)),
     graft.QueryDef("embed_cluster_drift", embedClusterDrift, Some(embedClusterDriftSql)),
   )
-
-  /** IVF top-k: assign corpus once (the inverted lists), route each probe to
-    * its nprobe nearest lists, exact re-rank within them.
-    */
-  def ivfTopK(
-      probes: DataFrame, // (probe_id, pvec)
-      corpus: DataFrame, // (cand_id, cvec)
-      centroids: DataFrame, // (cid, cvec_c)
-      nprobe: Int,
-      k: Int,
-  ): DataFrame = {
-    GraftFunctions.register(probes.sparkSession)
-    val lists = assign(corpus, "cand_id", "cvec", centroids)
-    val routes = route(probes, "probe_id", "pvec", centroids, nprobe)
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("cand_id"))
-    routes
-      .join(lists, "cid")
-      .filter(col("probe_id") =!= col("cand_id"))
-      .withColumn("sim", round(Vectors.nativeDot(col("pvec"), col("cvec")), 4))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select("probe_id", "cand_id", "sim", "rn")
-  }
 }

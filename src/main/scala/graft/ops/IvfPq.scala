@@ -135,7 +135,7 @@ object IvfPq {
     val g = IvfAnn.grid6(e)
     // probe routing: top-NProbe cells by exact grid distance (ties → lower
     // cid) — the shared kernel-form router (r17, one stage instead of two;
-    // see IvfAnn.gridAssign's rationale)
+    // see IvfAnn.routeToCells)
     val pg = g.filter(col("vec_id") < 100)
     val routes = IvfAnn
       .gridRoutes(e, cent, NProbe)

@@ -4,8 +4,8 @@ import graft.ops.{IvfAnn, Vectors}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** IVF coarse-quantizer ANN: trained lists, bounded candidate work,
-  * measurable recall vs brute force, exact returned scores.
+/** IVF coarse-quantizer ANN on the integer grid: trained lists, bounded
+  * candidate work, measurable recall vs brute force, exact returned scores.
   */
 class IvfSpec extends SparkSpec {
 
@@ -13,71 +13,34 @@ class IvfSpec extends SparkSpec {
     .embeddings(spark, sfDir)
     .select(col("vec_id").as("cand_id"), col("embedding").as("cvec"))
 
-  private def probes = Tables
-    .embeddings(spark, sfDir)
-    .filter(col("vec_id") < 20)
-    .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
+  private def vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
 
-  test("training yields k unit centroids and balanced-ish inverted lists") {
-    val cents = IvfAnn.train(corpus, k = 16, iters = 2)
-    assert(cents.count() == 16)
-    // unit-norm invariant (re-normalized after each Lloyd mean)
-    val norms = cents
-      .select(aggregate(col("cvec_c"), lit(0.0), (a, x) => a + x.cast("double") * x).as("n2"))
-      .collect()
-      .map(_.getDouble(0))
-    assert(norms.forall(n2 => math.abs(n2 - 1.0) < 1e-3))
-    // no empty lists, no list holding most of the corpus
-    val sizes = IvfAnn
-      .assign(corpus, "cand_id", "cvec", cents)
-      .groupBy("cid")
-      .count()
-      .collect()
-      .map(_.getLong(1))
-    assert(sizes.length == 16 && sizes.min > 0)
-    assert(sizes.max < corpus.count() / 2, s"degenerate clustering: ${sizes.mkString(",")}")
+  test("grid training at GridK and at the dynamic K: k lists, none empty, none with half the corpus") {
+    val e = vecs
+    val n = e.count()
+    for (k <- Seq(IvfAnn.GridK, math.max(4L, n / IvfAnn.CellTarget).toInt)) {
+      val cent = IvfAnn.trainGrid(e, k)
+      assert(cent.select("cid").distinct().count() == k)
+      val sizes = IvfAnn.gridAssign(e, cent).groupBy("cid").count().collect().map(_.getLong(1)).sorted
+      info(s"K = $k over n = $n: list sizes ${sizes.mkString(",")}")
+      assert(sizes.length == k && sizes.min > 0, s"empty list: ${sizes.mkString(",")}")
+      assert(sizes.sum == n)
+      assert(sizes.max < n / 2, s"degenerate clustering: ${sizes.mkString(",")}")
+    }
   }
 
-  test("ivf top-k: exact scores, bounded candidates, recall beats nprobe/k baseline") {
-    val cents = IvfAnn.train(corpus, k = 16, iters = 2)
-    val ann = IvfAnn.ivfTopK(probes, corpus, cents, nprobe = 4, k = 10)
-    val annPairs = ann.select("probe_id", "cand_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("cand_id"))
-    val truth = corpus
-      .crossJoin(probes)
-      .filter(col("probe_id") =!= col("cand_id"))
-      .withColumn("sim", round(Vectors.dot(col("pvec"), col("cvec")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
-      .select("probe_id", "cand_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .toSet
-
-    val recall = truth.count(annPairs.contains).toDouble / truth.size
-    // scanning nprobe of k lists blindly would give ~nprobe/k = 0.25;
-    // routing by centroid similarity must do meaningfully better
-    assert(recall >= 0.35, s"IVF recall $recall not better than blind-scan baseline")
-
-    // candidate work is bounded: each probe scores only its nprobe routed
-    // lists — measured as the actual routes⋈lists row count, which must sit
-    // near (nprobe/k)·|probes|·|corpus| (0.25 here; 0.5 allows imbalance),
-    // far below the brute-force probes×corpus
-    val lists = IvfAnn.assign(corpus, "cand_id", "cvec", cents)
-    val routed = IvfAnn.route(probes, "probe_id", "pvec", cents, 4)
-    val candRows = routed.join(lists, "cid").count()
-    val bruteForce = probes.count() * corpus.count()
+  test("grid routing to 4 of 16 lists bounds candidate work below half of probes x corpus") {
+    val e = vecs
+    val cent = IvfAnn.trainGrid(e, IvfAnn.GridK)
+    val routes = IvfAnn.gridRoutes(e, cent, 4)
+    val nProbes = e.filter(col("vec_id") < 100).count()
+    assert(routes.count() == 4 * nProbes, "each probe routes to exactly 4 lists")
+    // candidate work is the routes ⋈ lists row count: near (4/16)·probes·corpus
+    // for balanced lists, far below the brute-force probes × corpus
+    val lists = IvfAnn.gridAssign(e, cent)
+    val candRows = routes.join(lists, "cid").count()
+    val bruteForce = nProbes * e.count()
     assert(candRows < bruteForce / 2, s"routing scanned $candRows of $bruteForce pairs")
-
-    // every returned score is the exact dot of the pair (re-rank never approximates)
-    val rescored = ann
-      .join(probes, "probe_id")
-      .join(corpus, "cand_id")
-      .withColumn("exact", round(Vectors.dot(col("pvec"), col("cvec")), 4))
-      .filter(col("sim") =!= col("exact"))
-      .count()
-    assert(rescored == 0)
   }
 
   test("declared grid IVF (the oracled variant): recall floor and exact returned scores") {
