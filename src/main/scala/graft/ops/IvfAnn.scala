@@ -158,10 +158,11 @@ object IvfAnn {
     * vs 60 s at sf1). The long-form grid survives only at the Lloyd-mean
     * grain (per-(cid, dim) integer averages in [[trainGrid]]).
     *
-    * No broadcast hint here: the centroid side is whatever the caller
-    * passes, and for the dynamic-K cells K grows with the corpus, so
-    * whether K arrays still broadcast is AQE's size-based call, not a
-    * hardcoded promise.
+    * The build side of the cross join is the caller's call. The fixed-K
+    * index hints its centroid side broadcast ([[gridAssign]]: GridK rows by
+    * construction). The dynamic-K cells pass theirs unhinted: K grows with
+    * the corpus, so whether K arrays still broadcast is AQE's size-based
+    * call, not a hardcoded promise. Training is unhinted for both.
     */
   private[graft] def routeToCells(vecs: DataFrame, centA: DataFrame, probes: Int): DataFrame = {
     GraftFunctions.register(vecs.sparkSession)
@@ -344,10 +345,13 @@ object IvfAnn {
     cachedCentroids(s, "grid6:" + dir)(trainGrid(gridEmbeddings(s, dir), GridK))
 
   /** Fixed-K routing: each vector of `e` to its `probes` nearest cells of
-    * the long-form [[GridK]] index `cent`, through [[routeToCells]].
+    * the long-form [[GridK]] index `cent`, through [[routeToCells]]. The
+    * centroid side is broadcast explicitly: it is GridK rows by
+    * construction, and left to AQE the cross join broadcast the vector
+    * side in some runs and the centroid side in others.
     */
   private[graft] def gridAssign(e: DataFrame, cent: DataFrame, probes: Int = 1): DataFrame =
-    routeToCells(e, centArraysOf(cent), probes)
+    routeToCells(e, broadcast(centArraysOf(cent)), probes)
 
   /** Probe routing with the route rank kept: each probe's (vec_id < 100)
     * `maxNprobe` nearest cells as (probe_id, cid, rnp), maxNprobe > 1. ONE
