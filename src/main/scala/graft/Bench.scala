@@ -80,6 +80,18 @@ object Bench {
   private val reserveSec = 15.0 // final record write and session stop
   private val fastCut = 1.0 // below this, 2 samples suffice (see scaladoc)
 
+  /** The record's `pass` text: what each key's estimate is, given the
+    * number of timed sweeps the run finished. A run on few cores sheds
+    * sweep 3 at the full catalog, and its estimates are then mins of 2. */
+  private[graft] def passText(sweepsDone: Int): String = {
+    val what = sweepsDone match {
+      case n if n <= 1 => "1 warm sample per key"
+      case 2 => "min of 2 interleaved warm sweeps"
+      case _ => s"median of 3 interleaved warm sweeps (min of 2 for sub-${fastCut}s keys)"
+    }
+    s"$what into the noop sink, after 1 warm-up sweep"
+  }
+
   def main(args: Array[String]): Unit = {
     val wallT0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - wallT0) / 1e9
@@ -120,8 +132,7 @@ object Bench {
       val failures = arr(errors)
       val abortedJson = aborted.map(str).getOrElse("null")
       val snaps = measured.flatMap(k => firstRun.get(k).map(k -> _))
-      val passDesc = "median of up to 3 interleaved warm sweeps into the noop sink " +
-        s"(after 1 warm-up sweep; 2 samples for sub-${fastCut}s keys)"
+      val passDesc = passText(sweepsDone)
       val line =
         s"""{"metric":"total","value":$total,"unit":"sec",""" +
           s""""queries":${obj(names.map(k => k -> est.get(k).fold("null")(_.toString)))},""" +
@@ -139,7 +150,7 @@ object Bench {
       // the slowest keys first, as many as a 1700-char budget allows.
       val head =
         s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,""" +
-          s""""n_queries":${names.size},"pass":"median of interleaved warm sweeps","detail":"bench.json",""" +
+          s""""n_queries":${names.size},"pass":"$passDesc","detail":"bench.json",""" +
           s""""phase":"$phase","sweeps_done":$sweepsDone,"aborted":$abortedJson,""" +
           s""""value_normalized":${r3(total)},"canary_drift":null,""" +
           s""""throttled":$throttled,"failures":$failures,"queries":{"""

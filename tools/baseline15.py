@@ -55,6 +55,9 @@ spark = (
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    # no console progress bar: its carriage-return `[Stage N:>...]` updates
+    # share stderr with the `[pass N] key: secs` lines below
+    .config("spark.ui.showConsoleProgress", "false")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("WARN")
