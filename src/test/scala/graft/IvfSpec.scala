@@ -15,7 +15,7 @@ class IvfSpec extends SparkSpec {
 
   private def vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
 
-  test("grid training at GridK and at the dynamic K: k lists, none empty, none with half the corpus") {
+  test("grid training at GridK and dynamic K: k non-empty lists, none with half the corpus") {
     val e = vecs
     val n = e.count()
     for (k <- Seq(IvfAnn.GridK, math.max(4L, n / IvfAnn.CellTarget).toInt)) {
